@@ -4,6 +4,11 @@ The reference is schemaless-by-default (message trees, SURVEY.md §1.1);
 our engine is DataFrame-native so tables are first-class. Loaders go
 through ``spark.read.parquet`` so Catalyst gets predicate pushdown,
 column pruning and partition pruning for free on every query.
+
+``load_table`` accepts sessions built elsewhere (the round driver
+builds its own), so it calls ``session.ensure_session`` first: that
+pins the runtime confs the loader relies on (nanosAsLong, UTC) and
+ships the package to the Python workers.
 """
 
 from __future__ import annotations
@@ -11,6 +16,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from connect_spark.session import ensure_session
 
 TABLES = (
     "region",
@@ -32,59 +39,10 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _prepare_session(spark: SparkSession) -> None:
-    """Pin runtime SQL confs this engine relies on, regardless of how
-    the caller built the session (the round driver builds its own):
-    - nanosAsLong: events.parquet carries TIMESTAMP(NANOS), which Spark
-      otherwise refuses to read (PARQUET_TYPE_ILLEGAL);
-    - UTC session tz: timestamp→string casts must agree with the
-      DuckDB oracle's naive timestamps.
-    Both are runtime-settable; setting them here makes every query
-    self-contained."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # map merge semantics: right side wins (Bloblang merge/squash)
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    _ship_package(spark)
-
-
-def _ship_package(spark: SparkSession) -> None:
-    """Make ``connect_spark`` importable on executor Python workers no
-    matter where the driver process was launched from.  Pandas-UDF
-    closures defined in this package are pickled BY REFERENCE, so the
-    worker must import the module — which fails if the caller started
-    Spark from a different cwd with no PYTHONPATH (exactly what an
-    external driver does).  addPyFile works after session start and
-    distributes to real clusters too, so this is the 1000-executor
-    deployment path, not a local hack."""
-    sc = spark.sparkContext
-    if getattr(sc, "_connect_spark_shipped", False):
-        return
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"connect_spark_pkg_{os.getpid()}.zip"
-    )
-    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_STORED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if not fn.endswith(".py"):
-                    continue
-                full = os.path.join(root, fn)
-                rel = os.path.join(
-                    "connect_spark", os.path.relpath(full, pkg_dir)
-                )
-                zf.write(full, rel)
-    sc.addPyFile(zpath)
-    sc._connect_spark_shipped = True
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    _prepare_session(spark)
+    ensure_session(spark)
     df = spark.read.parquet(table_path(sf_dir, name))
     # events.ts is parquet TIMESTAMP(NANOS); with nanosAsLong it arrives
     # as int64 nanos — truncate to micros (what DuckDB does) and restore

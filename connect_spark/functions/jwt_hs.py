@@ -171,7 +171,7 @@ def sign_jwt_rs256(claims_json: Column, n: int, d: int) -> Column:
 def sign_jwt_es256(claims_json: Column, d: int) -> Column:
     """ES256 JWT: ECDSA P-256 + SHA-256, raw r||s signature (RFC
     7518 §3.4), deterministic RFC 6979 nonces."""
-    from connect_spark.functions import ecdsa_p256 as ec
+    from connect_spark.functions import ecdsa as ec
 
     header = _b64url(
         json.dumps({"alg": "ES256", "typ": "JWT"},
@@ -198,7 +198,7 @@ def sign_jwt_es256(claims_json: Column, d: int) -> Column:
 
 def parse_jwt_es256(token: Column, public_point: tuple[int, int]) -> Column:
     """Verify + decode an ES256 JWT; bad signature/shape → null."""
-    from connect_spark.functions import ecdsa_p256 as ec
+    from connect_spark.functions import ecdsa as ec
 
     qx, qy = public_point
 

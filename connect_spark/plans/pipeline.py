@@ -32,6 +32,7 @@ from connect_spark.operators.core import (
     select_parts,
     unarchive,
 )
+from connect_spark.session import ensure_session
 
 try:  # PyYAML is optional; JSON-style dict specs always work
     import yaml  # type: ignore
@@ -332,25 +333,22 @@ def _dynamic_apply(df: DataFrame, src: str, mode: str) -> DataFrame:
     )
 
 
-@processor("mapping")
-def _p_mapping(df: DataFrame, conf: Any) -> DataFrame:
-    """mapping.adoc:26 — Bloblang map producing a new document.
-
-    Mappings compile to Columns (the fast path Catalyst optimizes);
-    forms the Column compiler can't express — e.g. a whole-document
-    `root = <arbitrary expr>` — fall back to the dynamic per-message
+def _compile_or_fallback(df: DataFrame, conf: Any, mode: str) -> DataFrame:
+    """A `mapping`/`mutation` processor body: compile the Bloblang to
+    Columns (the fast path Catalyst optimizes); forms the Column
+    compiler can't express fall back to the dynamic per-message
     evaluator (bloblang/pyeval.py via the `bloblang` method's Arrow-
     batched UDF), producing the schemaless `content` JSON envelope.
     The fallback is announced once on the driver: it is the slow
     path, and a mapping meant for the hot path should compile."""
     if not isinstance(conf, str):
-        raise PipelineConfigError("mapping expects a Bloblang string")
+        raise PipelineConfigError(f"{mode} expects a Bloblang string")
     from pyspark.errors import AnalysisException
 
     from connect_spark.bloblang.compiler import BloblangError
 
     try:
-        return compile_mapping(df, conf, mode="mapping")
+        return compile_mapping(df, conf, mode=mode)
     except (BloblangError, AnalysisException) as exc:
         # fail fast if the dynamic evaluator can't parse it either —
         # a syntax error must not masquerade as a fallback — or uses
@@ -368,44 +366,27 @@ def _p_mapping(df: DataFrame, conf: Any) -> DataFrame:
                 f"implemented by the evaluator: {sorted(missing)})"
             ) from exc
         print(
-            "[connect_spark] mapping fell back to the dynamic "
+            f"[connect_spark] {mode} fell back to the dynamic "
             f"evaluator (not Column-compilable: {exc}); output is the "
             "schemaless `content` JSON envelope"
         )
-        return _dynamic_apply(df, conf, "mapping")
+        return _dynamic_apply(df, conf, mode)
+
+
+@processor("mapping")
+def _p_mapping(df: DataFrame, conf: Any) -> DataFrame:
+    """mapping.adoc:26 — Bloblang map producing a new document; e.g. a
+    whole-document `root = <arbitrary expr>` falls back."""
+    return _compile_or_fallback(df, conf, "mapping")
 
 
 @processor("mutation")
 def _p_mutation(df: DataFrame, conf: Any) -> DataFrame:
-    """mutation.adoc:26 — in-place Bloblang transform. Falls back to
-    the dynamic evaluator like mapping does; mutation is a mapping
-    whose root starts as the document (eval_batch mode='mutation'
-    materializes root as a lazy deep copy on first write)."""
-    if not isinstance(conf, str):
-        raise PipelineConfigError("mutation expects a Bloblang string")
-    from pyspark.errors import AnalysisException
-
-    from connect_spark.bloblang.compiler import BloblangError
-
-    try:
-        return compile_mapping(df, conf, mode="mutation")
-    except (BloblangError, AnalysisException) as exc:
-        from connect_spark.bloblang.pyeval import unsupported_methods
-
-        try:
-            missing = unsupported_methods(conf)
-        except Exception:
-            raise exc from None
-        if missing:
-            raise BloblangError(
-                f"{exc}; dynamic fallback unavailable too (methods not "
-                f"implemented by the evaluator: {sorted(missing)})"
-            ) from exc
-        print(
-            "[connect_spark] mutation fell back to the dynamic "
-            f"evaluator (not Column-compilable: {exc})"
-        )
-        return _dynamic_apply(df, conf, "mutation")
+    """mutation.adoc:26 — in-place Bloblang transform; mutation is a
+    mapping whose root starts as the document (eval_batch
+    mode='mutation' materializes root as a lazy deep copy on first
+    write)."""
+    return _compile_or_fallback(df, conf, "mutation")
 
 
 @processor("bloblang")
@@ -1677,6 +1658,7 @@ class Pipeline:
 
     def dataframe(self) -> DataFrame:
         """The composed lazy plan (input + processors, no output)."""
+        ensure_session(self.spark)
         # register named processor resources for `resource` lookups
         # (driver-side, plan-build time only)
         _RESOURCES.clear()

@@ -17,9 +17,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from connect_spark.catalog import _prepare_session, table_path
+from connect_spark.catalog import table_path
 from connect_spark.queries import QuerySpec
 from connect_spark.queries.windows import TUMBLING_SQL
+from connect_spark.session import ensure_session
 
 
 def window_tumbling_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -28,7 +29,7 @@ def window_tumbling_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode, and the drained memory table is returned as a batch frame.
     Same oracle as the batch query — a streaming-execution bug (window
     assignment, state merge, sink mode) breaks the hash."""
-    _prepare_session(spark)
+    ensure_session(spark)
     path = table_path(sf_dir, "events")
     schema = spark.read.parquet(path).schema
     # file streams need a directory source: point at sf_dir and glob
@@ -88,7 +89,7 @@ def streaming_dedupe_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys only, so the which-row-survives choice (arbitrary in both the
     reference's cache race and Spark's state store) can't skew the
     hash — this checks the state machinery, not arrival order."""
-    _prepare_session(spark)
+    ensure_session(spark)
     path = table_path(sf_dir, "events")
     schema = spark.read.parquet(path).schema
     stream = (
@@ -135,7 +136,7 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from connect_spark.streaming.stateful import running_totals
 
-    _prepare_session(spark)
+    ensure_session(spark)
     ev = spark.read.parquet(table_path(sf_dir, "events")).select(
         "user_id", "value"
     )
@@ -195,7 +196,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    _prepare_session(spark)
+    ensure_session(spark)
     ev = spark.read.parquet(table_path(sf_dir, "events")).select(
         "user_id", "ts", "value", "event_id"
     )
@@ -323,7 +324,7 @@ def streaming_join_hydration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    _prepare_session(spark)
+    ensure_session(spark)
     ev = spark.read.parquet(table_path(sf_dir, "events")).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -417,7 +418,7 @@ def streaming_refresh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    _prepare_session(spark)
+    ensure_session(spark)
     docs = spark.read.parquet(table_path(sf_dir, "documents")).select(
         "doc_id", "text")
     fp = F.md5(F.lower(F.trim("text")))

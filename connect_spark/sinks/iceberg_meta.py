@@ -342,7 +342,7 @@ def _serialize_bound(iceberg_type: str, value) -> bytes | None:
 def _to_epoch_micros(value) -> int:
     """datetime/str/int → epoch microseconds (naive datetimes are
     UTC wall clock — the engine pins spark.sql.session.timeZone=UTC,
-    catalog._prepare_session)."""
+    session.ensure_session)."""
     import datetime
 
     if isinstance(value, str):

@@ -51,6 +51,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from connect_spark.session import ensure_session
+
 CDC_ENVELOPE = StructType(
     [
         StructField("lsn", LongType()),
@@ -456,6 +458,9 @@ class CdcWalDataSource(DataSource):
 
 
 def register(spark: SparkSession) -> None:
+    """Register the ``cdc_wal`` Python DataSource; its reader runs on
+    the Python workers, which must be able to import this package."""
+    ensure_session(spark)
     spark.dataSource.register(CdcWalDataSource)
 
 
@@ -523,8 +528,13 @@ def materialize_cdc_stream(
     def _apply(batch: DataFrame, _epoch: int) -> None:
         from connect_spark.sources.cdc import apply_cdc_batch
 
-        rows = cdc_changes_to_rows(batch, row_schema, key)
-        apply_cdc_batch(cache, rows, key)
+        # the apply scans the batch several times (upsert, delete);
+        # persisting reads the source once per batch
+        rows = cdc_changes_to_rows(batch, row_schema, key).persist()
+        try:
+            apply_cdc_batch(cache, rows, key)
+        finally:
+            rows.unpersist()
 
     return (
         stream.writeStream.foreachBatch(_apply)

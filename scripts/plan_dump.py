@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Dump `.explain("formatted")` for every headline query (plus any
-extra names given on argv) to plans/r15/<query>_<suffix>.txt.
+extra names given on argv) to <round_dir>/<query>_<suffix>.txt.
 
-Usage: python scripts/r15_plans.py <suffix> [query ...]
+Usage: python scripts/plan_dump.py <round_dir> <suffix> [query ...]
+  e.g. python scripts/plan_dump.py plans/r16 before
 """
 
 from __future__ import annotations
@@ -17,14 +18,13 @@ from connect_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    extra = set(sys.argv[2:])
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    extra = set(sys.argv[3:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r15")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("r15_plans")
+    spark = get_spark("plan_dump")
     for spec in all_queries():
         if not (spec.headline or spec.name in extra):
             continue

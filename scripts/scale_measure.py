@@ -8,7 +8,9 @@ Usage:
 
 Builds /tmp/scalebench/{n}x table dirs (cached across runs), executes
 each query via the registry with a full materialization (noop write),
-and prints one JSON line per (query, n) with wall seconds.
+and prints one JSON line per (query, n) with wall seconds.  The session
+comes from get_spark: cores from $SPARK_GRAFT_CPUS, driver memory from
+$SPARK_GRAFT_DRIVER_MEM.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from connect_spark.queries import all_queries  # noqa: E402
+from connect_spark.session import get_spark  # noqa: E402
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = "/tmp/scalebench"
@@ -104,19 +107,7 @@ def build_replica(spark: SparkSession, n: int) -> str:
 
 def main() -> None:
     names = sys.argv[1:] or DEFAULT_QUERIES
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.sql.legacy.parquet.nanosAsLong", "false"
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("scale_measure")
     registry = {s.name: s.fn for s in all_queries()}
     for n in NS:
         sf_dir = build_replica(spark, n)

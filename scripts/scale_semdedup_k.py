@@ -24,22 +24,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
+from connect_spark.session import get_spark  # noqa: E402
 from scripts.scale_measure import NS, build_replica  # noqa: E402
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("scale_semdedup_k")
     from connect_spark.queries import clustering
 
     base_k = clustering.K

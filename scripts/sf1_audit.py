@@ -24,9 +24,8 @@ import time
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from connect_spark.queries import all_queries  # noqa: E402
+from connect_spark.session import get_spark  # noqa: E402
 from scripts.scale_measure import BASE, build_replica  # noqa: E402
 
 # queries whose outputs are aggregate-small AND whose plans carry the
@@ -53,16 +52,7 @@ def plan_markers(df) -> dict:
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("sf1_audit")
     registry = {s.name: s for s in all_queries()}
     names = sys.argv[1:] or [
         s.name for s in all_queries() if s.headline]

@@ -57,6 +57,9 @@ def test_cdc_snapshot_then_wal_materializes(spark, tmp_path):
 
     state = {r.id: r.val for r in cache.read().collect()}
     assert state == {1: "v1", 2: "v2b", 4: "v4", 5: "v5", 6: "v6"}
+    # each change is read from the source once: 5 snapshot rows + 3 WAL
+    # changes, however many scans the per-batch apply makes
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 8
 
 
 def test_cdc_resume_from_checkpoint_no_reprocessing(spark, tmp_path):

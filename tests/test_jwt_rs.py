@@ -126,7 +126,7 @@ def test_rsa_public_pem_parsing(rsa_key):
 
 def test_ecdsa_p256_rfc6979_vector():
     """RFC 6979 A.2.5, P-256 + SHA-256, message 'sample'."""
-    from connect_spark.functions import ecdsa_p256 as ec
+    from connect_spark.functions import ecdsa as ec
 
     d = int(
         "C9AFA9D845BA75166B5C215767B1D6934E50C3DB36E89B127B8A622B120F6721",
@@ -149,7 +149,7 @@ def test_ecdsa_p256_rfc6979_vector():
 
 
 def test_jwt_es256_sign_and_parse(spark):
-    from connect_spark.functions import ecdsa_p256 as ec
+    from connect_spark.functions import ecdsa as ec
     from connect_spark.functions.jwt_hs import parse_jwt_es256, sign_jwt_es256
 
     d = 0xC9AFA9D845BA75166B5C215767B1D6934E50C3DB36E89B127B8A622B120F6721
