@@ -9,11 +9,16 @@ Python literals (the compiler lowers `Lit` nodes to Python values).
 
 from __future__ import annotations
 
+import hashlib
+import hmac
+import json
+import re
 from typing import Any, Callable
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from connect_spark.boundary import row_udf
 
 
 def _lit(v: Any) -> Column:
@@ -253,71 +258,61 @@ def _hash(c: Column, algo: str, key=None, polynomial: str = "IEEE") -> Column:
     if algo in ("sha3_256", "sha3_512", "fnv32", "crc32") or algo.startswith(
         "hmac_"
     ):
-        from pyspark.sql.functions import pandas_udf
-
         kcol = (
             key
             if isinstance(key, Column)
             else F.lit(key if key is not None else "")
         ).cast("binary")
 
-        @pandas_udf("string")
-        def run(data: pd.Series, k: pd.Series) -> pd.Series:
-            import hashlib as _hl
-            import hmac as _hm
+        def crc_poly(poly_rev: int, d: bytes) -> int:
+            crc = 0xFFFFFFFF
+            for byte in d:
+                crc ^= byte
+                for _ in range(8):
+                    crc = (crc >> 1) ^ (
+                        poly_rev if crc & 1 else 0
+                    )
+            return crc ^ 0xFFFFFFFF
 
-            def crc_poly(poly_rev: int, d: bytes) -> int:
-                crc = 0xFFFFFFFF
+        def one(d, kk):
+            if isinstance(d, str):
+                d = d.encode()
+            elif isinstance(d, bool):
+                d = b"\x01" if d else b"\x00"
+            elif isinstance(d, int):
+                # match the JVM paths' cast('binary') layout
+                d = int(d).to_bytes(8, "big", signed=True)
+            elif isinstance(d, float):
+                import struct as _st
+
+                d = _st.pack(">d", d)
+            else:
+                d = bytes(d)
+            if algo == "sha3_256":
+                return hashlib.sha3_256(d).hexdigest()
+            if algo == "sha3_512":
+                return hashlib.sha3_512(d).hexdigest()
+            if algo == "fnv32":
+                # FNV-1a 32-bit (public domain spec)
+                h = 0x811C9DC5
                 for byte in d:
-                    crc ^= byte
-                    for _ in range(8):
-                        crc = (crc >> 1) ^ (
-                            poly_rev if crc & 1 else 0
-                        )
-                return crc ^ 0xFFFFFFFF
+                    h = ((h ^ byte) * 0x01000193) & 0xFFFFFFFF
+                return f"{h:08x}"
+            if algo == "crc32":
+                rev = {
+                    "CASTAGNOLI": 0x82F63B78,
+                    "KOOPMAN": 0xEB31D82E,
+                }[polynomial.upper()]
+                return f"{crc_poly(rev, d):08x}"
+            digest = {
+                "hmac_sha1": hashlib.sha1,
+                "hmac_sha256": hashlib.sha256,
+                "hmac_sha512": hashlib.sha512,
+            }[algo]
+            return hmac.new(bytes(kk), d, digest).hexdigest()
 
-            def one(d, kk):
-                if d is None:
-                    return None
-                if isinstance(d, str):
-                    d = d.encode()
-                elif isinstance(d, bool):
-                    d = b"\x01" if d else b"\x00"
-                elif isinstance(d, int):
-                    # match the JVM paths' cast('binary') layout
-                    d = int(d).to_bytes(8, "big", signed=True)
-                elif isinstance(d, float):
-                    import struct as _st
-
-                    d = _st.pack(">d", d)
-                else:
-                    d = bytes(d)
-                if algo == "sha3_256":
-                    return _hl.sha3_256(d).hexdigest()
-                if algo == "sha3_512":
-                    return _hl.sha3_512(d).hexdigest()
-                if algo == "fnv32":
-                    # FNV-1a 32-bit (public domain spec)
-                    h = 0x811C9DC5
-                    for byte in d:
-                        h = ((h ^ byte) * 0x01000193) & 0xFFFFFFFF
-                    return f"{h:08x}"
-                if algo == "crc32":
-                    rev = {
-                        "CASTAGNOLI": 0x82F63B78,
-                        "KOOPMAN": 0xEB31D82E,
-                    }[polynomial.upper()]
-                    return f"{crc_poly(rev, d):08x}"
-                digest = {
-                    "hmac_sha1": _hl.sha1,
-                    "hmac_sha256": _hl.sha256,
-                    "hmac_sha512": _hl.sha512,
-                }[algo]
-                return _hm.new(bytes(kk or b""), d, digest).hexdigest()
-
-            return pd.Series([one(d, kk) for d, kk in zip(data, k)])
-
-        return run(c, kcol)
+        # a null key hashes as the empty key
+        return row_udf("string", one)(c, F.coalesce(kcol, F.lit(b"")))
     raise ValueError(f"unsupported hash algorithm {algo!r}")
 
 
@@ -342,19 +337,11 @@ def _unicode_segments(c: Column, segmentation_type: str) -> Column:
         raise ValueError(
             f"unknown segmentation type: {segmentation_type}"
         )
-    from pyspark.sql.functions import pandas_udf
+    from connect_spark.text.segmentation import unicode_segments
 
-    @pandas_udf("array<string>")
-    def run(s: pd.Series) -> pd.Series:
-        from connect_spark.text.segmentation import unicode_segments
-
-        return s.map(
-            lambda v: None
-            if v is None
-            else unicode_segments(v, segmentation_type)
-        )
-
-    return run(c.cast("string"))
+    return row_udf(
+        "array<string>", lambda v: unicode_segments(v, segmentation_type)
+    )(c.cast("string"))
 
 
 @method("compare_bcrypt")
@@ -365,23 +352,11 @@ def _compare_bcrypt(c: Column, hashed_secret: str) -> Column:
     (functions/bcrypt_py.py), Arrow-batched; malformed hashes yield
     null (the reference errors). Note bcrypt's work factor applies
     per row — this is an edge op, not a hot-path transform."""
-    from pyspark.sql.functions import pandas_udf
+    from connect_spark.functions.bcrypt_py import compare_bcrypt
 
-    @pandas_udf("boolean")
-    def run(s: pd.Series) -> pd.Series:
-        from connect_spark.functions.bcrypt_py import compare_bcrypt
-
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return compare_bcrypt(v, hashed_secret)
-            except ValueError:
-                return None
-
-        return s.map(one)
-
-    return run(c.cast("string"))
+    return row_udf(
+        "boolean", lambda v: compare_bcrypt(v, hashed_secret), (ValueError,)
+    )(c.cast("string"))
 
 
 @method("compare_argon2")
@@ -391,23 +366,11 @@ def _compare_argon2(c: Column, hashed_secret: str) -> Column:
     (internal/impl/crypto/argon2.go:112-160). Pure-Python RFC 9106
     (functions/argon2_py.py), oracle-pinned against the cryptography
     package's Rust Argon2; malformed hashes yield null."""
-    from pyspark.sql.functions import pandas_udf
+    from connect_spark.functions.argon2_py import compare_argon2
 
-    @pandas_udf("boolean")
-    def run(s: pd.Series) -> pd.Series:
-        from connect_spark.functions.argon2_py import compare_argon2
-
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return compare_argon2(v, hashed_secret)
-            except ValueError:
-                return None
-
-        return s.map(one)
-
-    return run(c.cast("string"))
+    return row_udf(
+        "boolean", lambda v: compare_argon2(v, hashed_secret), (ValueError,)
+    )(c.cast("string"))
 
 
 @method("parse_duration")
@@ -534,24 +497,12 @@ def _parse_yaml(c: Column) -> Column:
     """parse_yaml (methods.adoc:3723): YAML → JSON string via an
     Arrow-batched UDF (PyYAML in-container); chain .parse_json() /
     json_path() for structure."""
-    import json
-
     import yaml
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("string")
-    def _yaml_to_json(s: pd.Series) -> pd.Series:
-        def conv(v):
-            if v is None:
-                return None
-            try:
-                return json.dumps(yaml.safe_load(v))
-            except Exception:  # noqa: BLE001 — parse failure → null
-                return None
-
-        return s.map(conv)
-
-    return _yaml_to_json(c)
+    # parse failure → null
+    return row_udf(
+        "string", lambda v: json.dumps(yaml.safe_load(v)), (Exception,)
+    )(c)
 
 
 @method("bloblang")
@@ -564,35 +515,24 @@ def _bloblang_eval(c: Column, mapping: Any) -> Column:
     mapping source. Target JSON decodes to `this`; non-JSON targets
     pass through as strings. Result is a JSON string (chain
     .parse_json() / from_json for structure); failures → null."""
-    import json
+    from connect_spark.bloblang.pyeval import (
+        compile_cached,
+        eval_parsed_value,
+    )
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _run(target: pd.Series, src: pd.Series) -> pd.Series:
-        from connect_spark.bloblang.pyeval import (
-            compile_cached,
-            eval_parsed_value,
+    def conv(t, m):
+        try:
+            this = json.loads(t)
+        except Exception:  # noqa: BLE001 — raw string target
+            this = t
+        return json.dumps(
+            eval_parsed_value(compile_cached(m), this), sort_keys=True
         )
 
-        def conv(t, m):
-            if t is None or m is None:
-                return None
-            try:
-                this = json.loads(t)
-            except Exception:  # noqa: BLE001 — raw string target
-                this = t
-            try:
-                result = eval_parsed_value(compile_cached(m), this)
-                return json.dumps(result, sort_keys=True)
-            except Exception:  # noqa: BLE001 — mapping failure → null
-                return None
-
-        return pd.Series(
-            [conv(t, m) for t, m in zip(target, src)], dtype=object
-        )
-
-    return _run(c.cast("string"), _lit(mapping).cast("string"))
+    # mapping failure → null
+    return row_udf("string", conv, (Exception,))(
+        c.cast("string"), _lit(mapping).cast("string")
+    )
 
 
 # --- error handling (about.adoc:365-402) ---
@@ -605,8 +545,6 @@ method("or")(lambda c, fallback: F.coalesce(c, _lit(fallback)))
 
 
 def _aes_method(mode: str):
-    from pyspark.sql.functions import pandas_udf
-
     def impl(c: Column, scheme, key, iv) -> Column:
         from connect_spark.functions import aes as _aes
 
@@ -614,26 +552,16 @@ def _aes_method(mode: str):
             raise ValueError("encrypt_aes/decrypt_aes scheme must be a literal")
         fn = _aes.encrypt_aes if mode == "enc" else _aes.decrypt_aes
 
-        @pandas_udf("binary")
-        def run(data: pd.Series, k: pd.Series, v: pd.Series) -> pd.Series:
-            def one(d, kk, vv):
-                if d is None or kk is None or vv is None:
-                    return None
-                if isinstance(d, str):
-                    d = d.encode()
-                if isinstance(kk, str):
-                    kk = kk.encode()
-                if isinstance(vv, str):
-                    vv = vv.encode()
-                return fn(bytes(d), scheme, bytes(kk), bytes(vv))
+        def one(d, kk, vv):
+            if isinstance(d, str):
+                d = d.encode()
+            if isinstance(kk, str):
+                kk = kk.encode()
+            if isinstance(vv, str):
+                vv = vv.encode()
+            return fn(bytes(d), scheme, bytes(kk), bytes(vv))
 
-            return pd.Series(
-                [one(d, kk, vv) for d, kk, vv in zip(data, k, v)]
-            )
-
-        kcol = key if isinstance(key, Column) else F.lit(key)
-        vcol = iv if isinstance(iv, Column) else F.lit(iv)
-        return run(c, kcol, vcol)
+        return row_udf("binary", one)(c, _lit(key), _lit(iv))
 
     return impl
 
@@ -680,30 +608,16 @@ def _replace_many(c: Column, pairs) -> Column:
     strings.Replacer (sequential F.replace chains would let later
     pairs rewrite earlier pairs' output, e.g. ['a','b','b','z'] on
     'ab' must give 'bz', not 'zz')."""
-    from pyspark.sql.functions import pandas_udf
-
     if isinstance(pairs, Column):
         raise ValueError("replace_many needs a literal pair array")
     vals = [str(v) for v in pairs]
     table = list(zip(vals[::2], vals[1::2]))
+    rx = re.compile("|".join(re.escape(old) for old, _ in table))
+    repl = dict(table)
 
-    @pandas_udf("string")
-    def _run(s: pd.Series) -> pd.Series:
-        import re as _re
-
-        rx = _re.compile(
-            "|".join(_re.escape(old) for old, _ in table)
-        )
-        repl = dict(table)
-
-        def one(v):
-            if v is None:
-                return None
-            return rx.sub(lambda m: repl[m.group(0)], v)
-
-        return s.map(one)
-
-    return _run(c.cast("string"))
+    return row_udf(
+        "string", lambda v: rx.sub(lambda m: repl[m.group(0)], v)
+    )(c.cast("string"))
 
 
 METHODS["replace_all_many"] = METHODS["replace_many"]
@@ -933,49 +847,31 @@ _jwt_methods()
 def _parse_form(c: Column) -> Column:
     """methods.adoc parse_form_url_encoded → JSON string (single
     values unwrapped, repeats as arrays, Go url.ParseQuery shape)."""
-    from pyspark.sql.functions import pandas_udf
+    from urllib.parse import parse_qs
 
-    @pandas_udf("string")
-    def _run(s: pd.Series) -> pd.Series:
-        import json as _json
-        from urllib.parse import parse_qs
+    def one(v):
+        q = parse_qs(v, keep_blank_values=True)
+        return json.dumps(
+            {
+                k: vals[0] if len(vals) == 1 else vals
+                for k, vals in sorted(q.items())
+            },
+            separators=(",", ":"),
+        )
 
-        def one(v):
-            if v is None:
-                return None
-            q = parse_qs(v, keep_blank_values=True)
-            return _json.dumps(
-                {
-                    k: vals[0] if len(vals) == 1 else vals
-                    for k, vals in sorted(q.items())
-                },
-                separators=(",", ":"),
-            )
-
-        return s.map(one)
-
-    return _run(c.cast("string"))
+    return row_udf("string", one)(c.cast("string"))
 
 
 @method("format_yaml")
 def _format_yaml(c: Column) -> Column:
-    from pyspark.sql.functions import pandas_udf
+    import yaml
 
-    @pandas_udf("string")
-    def _run(s: pd.Series) -> pd.Series:
-        import json as _json
-
-        import yaml as _yaml
-
-        return s.map(
-            lambda v: None
-            if v is None
-            else _yaml.safe_dump(
-                _json.loads(v), default_flow_style=False, sort_keys=True
-            )
-        )
-
-    return _run(c.cast("string"))
+    return row_udf(
+        "string",
+        lambda v: yaml.safe_dump(
+            json.loads(v), default_flow_style=False, sort_keys=True
+        ),
+    )(c.cast("string"))
 
 
 # --- more parsing / codec method forms ------------------------------
@@ -1055,83 +951,57 @@ def _m_parse_parquet(c: Column) -> Column:
     """methods.adoc parse_parquet: a parquet-file byte column → array
     of row-JSON strings (explode downstream for one message per row).
     pyarrow decodes each blob inside one Arrow batch."""
-    from pyspark.sql.functions import pandas_udf
+    import io
 
-    @pandas_udf("array<string>")
-    def _run(s: pd.Series) -> pd.Series:
-        import io
-        import json as _json
+    import pyarrow.parquet as pq
 
-        import pyarrow.parquet as pq
+    def one(b):
+        table = pq.read_table(io.BytesIO(bytes(b)))
+        return [
+            json.dumps(
+                {k: v for k, v in row.items()},
+                separators=(",", ":"),
+                default=str,
+            )
+            for row in table.to_pylist()
+        ]
 
-        def one(b):
-            if b is None:
-                return None
-            table = pq.read_table(io.BytesIO(bytes(b)))
-            return [
-                _json.dumps(
-                    {k: v for k, v in row.items()},
-                    separators=(",", ":"),
-                    default=str,
-                )
-                for row in table.to_pylist()
-            ]
+    return row_udf("array<string>", one)(c.cast("binary"))
 
-        return s.map(one)
-
-    return _run(c.cast("binary"))
 
 
 @method("re_find_all_submatch")
 def _m_re_submatch(c: Column, pattern: str) -> Column:
     """All matches, each as [full, group1, ...] (methods.adoc)."""
-    from pyspark.sql.functions import pandas_udf
+    rx = re.compile(pattern)
 
-    @pandas_udf("array<array<string>>")
-    def _run(s: pd.Series) -> pd.Series:
-        import re as _re
+    return row_udf(
+        "array<array<string>>",
+        lambda v: [[m.group(0), *m.groups("")] for m in rx.finditer(v)],
+    )(c.cast("string"))
 
-        rx = _re.compile(pattern)
-
-        def one(v):
-            if v is None:
-                return None
-            return [
-                [m.group(0), *m.groups("")]
-                for m in rx.finditer(v)
-            ]
-
-        return s.map(one)
-
-    return _run(c.cast("string"))
 
 
 @method("re_find_object")
 def _m_re_find_object(c: Column, pattern: str) -> Column:
     """First match as a map of named (and numbered) groups."""
-    from pyspark.sql.functions import pandas_udf
+    rx = re.compile(pattern)
 
-    @pandas_udf("map<string,string>")
-    def _run(s: pd.Series) -> pd.Series:
-        import re as _re
+    def one(v):
+        m = rx.search(v)
+        return None if m is None else _match_map(m)
 
-        rx = _re.compile(pattern)
+    return row_udf("map<string,string>", one)(c.cast("string"))
 
-        def one(v):
-            if v is None:
-                return None
-            m = rx.search(v)
-            if m is None:
-                return None
-            out = {"0": m.group(0)}
-            for i, g in enumerate(m.groups(""), start=1):
-                out[str(i)] = g
-            out.update({k: v or "" for k, v in m.groupdict().items()})
-            return out
 
-        return s.map(one)
+def _match_map(m: re.Match) -> dict[str, str]:
+    """A regex match as {"0": full, "1": group1, ..., name: group}."""
+    out = {"0": m.group(0)}
+    for i, g in enumerate(m.groups(""), start=1):
+        out[str(i)] = g
+    out.update({k: v or "" for k, v in m.groupdict().items()})
+    return out
 
-    return _run(c.cast("string"))
 
 
 # --- collapse / regex aliases / geoip method family ------------------
@@ -1144,61 +1014,35 @@ def _m_collapse(c: Column) -> Column:
     """methods.adoc collapse: nested object → flat map with
     dot-separated (and array-indexed) keys. One Arrow batch over the
     JSON form."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("map<string,string>")
-    def _run(s: pd.Series) -> pd.Series:
-        import json as _json
+    def walk(prefix, v, out):
+        if isinstance(v, dict):
+            for k, sub in v.items():
+                walk(f"{prefix}.{k}" if prefix else k, sub, out)
+        elif isinstance(v, list):
+            for i, sub in enumerate(v):
+                walk(f"{prefix}.{i}", sub, out)
+        else:
+            out[prefix] = json.dumps(v) if not isinstance(v, str) else v
 
-        def walk(prefix, v, out):
-            if isinstance(v, dict):
-                for k, sub in v.items():
-                    walk(f"{prefix}.{k}" if prefix else k, sub, out)
-            elif isinstance(v, list):
-                for i, sub in enumerate(v):
-                    walk(f"{prefix}.{i}", sub, out)
-            else:
-                out[prefix] = (
-                    _json.dumps(v) if not isinstance(v, str) else v
-                )
+    def one(v):
+        out: dict = {}
+        walk("", json.loads(v), out)
+        return out
 
-        def one(v):
-            if v is None:
-                return None
-            out: dict = {}
-            walk("", _json.loads(v), out)
-            return out
+    return row_udf("map<string,string>", one)(c.cast("string"))
 
-        return s.map(one)
-
-    return _run(c.cast("string"))
 
 
 @method("re_find_all_object")
 def _m_re_find_all_object(c: Column, pattern: str) -> Column:
-    from pyspark.sql.functions import pandas_udf
+    rx = re.compile(pattern)
 
-    @pandas_udf("array<map<string,string>>")
-    def _run(s: pd.Series) -> pd.Series:
-        import re as _re
+    return row_udf(
+        "array<map<string,string>>",
+        lambda v: [_match_map(m) for m in rx.finditer(v)],
+    )(c.cast("string"))
 
-        rx = _re.compile(pattern)
-
-        def one(v):
-            if v is None:
-                return None
-            out = []
-            for m in rx.finditer(v):
-                d = {"0": m.group(0)}
-                for i, g in enumerate(m.groups(""), start=1):
-                    d[str(i)] = g
-                d.update({k: vv or "" for k, vv in m.groupdict().items()})
-                out.append(d)
-            return out
-
-        return s.map(one)
-
-    return _run(c.cast("string"))
 
 
 def _geoip_method(field_path: tuple[str, ...] | None):
@@ -1206,42 +1050,33 @@ def _geoip_method(field_path: tuple[str, ...] | None):
     MMDB (functions/geoip.py pure-Python reader). The reader is opened
     once per executor worker (cache keyed on path) and the looked-up
     record — or one field path of it — returns as JSON."""
-    from pyspark.sql.functions import pandas_udf
+
+    from connect_spark.functions.geoip import MmdbReader
 
     def impl(c: Column, mmdb_path: str) -> Column:
-        @pandas_udf("string")
-        def _run(s: pd.Series) -> pd.Series:
-            import json as _json
-
-            from connect_spark.functions.geoip import MmdbReader
-
-            cache = _GEOIP_READERS
-            rdr = cache.get(mmdb_path)
+        def one(ip):
+            rdr = _GEOIP_READERS.get(mmdb_path)
             if rdr is None:
                 with open(mmdb_path, "rb") as fh:
-                    rdr = cache.setdefault(mmdb_path, MmdbReader(fh.read()))
+                    rdr = _GEOIP_READERS.setdefault(
+                        mmdb_path, MmdbReader(fh.read())
+                    )
+            try:
+                rec = rdr.lookup(ip)
+            except Exception:  # noqa: BLE001 - bad IP → null
+                return None
+            if rec is None:
+                return None
+            if field_path:
+                for k in field_path:
+                    if not isinstance(rec, dict) or k not in rec:
+                        return None
+                    rec = rec[k]
+            return rec if isinstance(rec, str) else json.dumps(
+                rec, separators=(",", ":"), sort_keys=True
+            )
 
-            def one(ip):
-                if ip is None:
-                    return None
-                try:
-                    rec = rdr.lookup(ip)
-                except Exception:  # noqa: BLE001 - bad IP → null
-                    return None
-                if rec is None:
-                    return None
-                if field_path:
-                    for k in field_path:
-                        if not isinstance(rec, dict) or k not in rec:
-                            return None
-                        rec = rec[k]
-                return rec if isinstance(rec, str) else _json.dumps(
-                    rec, separators=(",", ":"), sort_keys=True
-                )
-
-            return s.map(one)
-
-        return _run(c.cast("string"))
+        return row_udf("string", one)(c.cast("string"))
 
     return impl
 
@@ -1278,39 +1113,30 @@ def _m_explode(c: Column, path: str) -> Column:
     the `path` field's elements distributed with surrounding structure
     preserved (arrays → element per doc, objects → {key: value} per
     doc). Feed the result to unarchive/F.explode for row fan-out."""
-    from pyspark.sql.functions import pandas_udf
+    parts = path.split(".")
 
-    @pandas_udf("array<string>")
-    def _run(s: pd.Series) -> pd.Series:
-        import json as _json
+    def one(v):
+        doc = json.loads(v)
+        parent = doc
+        for p in parts[:-1]:
+            parent = parent[p]
+        target = parent[parts[-1]]
+        out = []
+        if isinstance(target, list):
+            items = target
+        elif isinstance(target, dict):
+            items = [{k: val} for k, val in target.items()]
+        else:
+            raise ValueError(
+                f"explode target {path!r} is not an array or object"
+            )
+        for item in items:
+            parent[parts[-1]] = item
+            out.append(json.dumps(doc, separators=(",", ":")))
+        return out
 
-        parts = path.split(".")
+    return row_udf("array<string>", one)(c.cast("string"))
 
-        def one(v):
-            if v is None:
-                return None
-            doc = _json.loads(v)
-            parent = doc
-            for p in parts[:-1]:
-                parent = parent[p]
-            target = parent[parts[-1]]
-            out = []
-            if isinstance(target, list):
-                items = target
-            elif isinstance(target, dict):
-                items = [{k: val} for k, val in target.items()]
-            else:
-                raise ValueError(
-                    f"explode target {path!r} is not an array or object"
-                )
-            for item in items:
-                parent[parts[-1]] = item
-                out.append(_json.dumps(doc, separators=(",", ":")))
-            return out
-
-        return s.map(one)
-
-    return _run(c.cast("string"))
 
 
 def _deep_diff(before, after, path):
@@ -1352,73 +1178,58 @@ def _deep_diff(before, after, path):
 @method("diff")
 def _m_diff(c: Column, other) -> Column:
     """Deep changelog between two JSON values → JSON array string."""
-    from pyspark.sql.functions import pandas_udf
+    return row_udf(
+        "string",
+        lambda x, y: json.dumps(
+            _deep_diff(json.loads(x), json.loads(y), []),
+            separators=(",", ":"),
+        ),
+    )(c.cast("string"), _lit(other).cast("string"))
 
-    @pandas_udf("string")
-    def _run(a: pd.Series, b: pd.Series) -> pd.Series:
-        import json as _json
-
-        def one(x, y):
-            if x is None or y is None:
-                return None
-            return _json.dumps(
-                _deep_diff(_json.loads(x), _json.loads(y), []),
-                separators=(",", ":"),
-            )
-
-        return pd.Series([one(x, y) for x, y in zip(a, b)])
-
-    return _run(c.cast("string"), _lit(other).cast("string"))
 
 
 @method("patch")
 def _m_patch(c: Column, changelog) -> Column:
     """Apply a diff changelog to a JSON value → JSON string."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("string")
-    def _run(a: pd.Series, b: pd.Series) -> pd.Series:
-        import json as _json
+    def one(x, log):
+        doc = json.loads(x)
+        entries = json.loads(log)
+        # list deletes must apply highest-index-first or each
+        # removal shifts the indexes of the remaining ones (diff
+        # emits them ascending); non-deletes keep their order
+        ordered = [e for e in entries if e["Type"] != "delete"] + \
+            sorted(
+                (e for e in entries if e["Type"] == "delete"),
+                key=lambda e: tuple(
+                    (0, int(p), "") if str(p).isdigit()
+                    else (1, 0, str(p))
+                    for p in e["Path"]
+                ),
+                reverse=True,
+            )
+        for entry in ordered:
+            parts = entry["Path"]
+            parent = doc
+            for p in parts[:-1]:
+                p = int(p) if isinstance(parent, list) else p
+                parent = parent[p]
+            leaf = parts[-1]
+            leaf = int(leaf) if isinstance(parent, list) else leaf
+            if entry["Type"] == "delete":
+                del parent[leaf]
+            elif entry["Type"] == "create" and isinstance(
+                parent, list
+            ) and leaf == len(parent):
+                parent.append(entry["To"])
+            else:
+                parent[leaf] = entry["To"]
+        return json.dumps(doc, separators=(",", ":"), sort_keys=True)
 
-        def one(x, log):
-            if x is None or log is None:
-                return None
-            doc = _json.loads(x)
-            entries = _json.loads(log)
-            # list deletes must apply highest-index-first or each
-            # removal shifts the indexes of the remaining ones (diff
-            # emits them ascending); non-deletes keep their order
-            ordered = [e for e in entries if e["Type"] != "delete"] + \
-                sorted(
-                    (e for e in entries if e["Type"] == "delete"),
-                    key=lambda e: tuple(
-                        (0, int(p), "") if str(p).isdigit()
-                        else (1, 0, str(p))
-                        for p in e["Path"]
-                    ),
-                    reverse=True,
-                )
-            for entry in ordered:
-                parts = entry["Path"]
-                parent = doc
-                for p in parts[:-1]:
-                    p = int(p) if isinstance(parent, list) else p
-                    parent = parent[p]
-                leaf = parts[-1]
-                leaf = int(leaf) if isinstance(parent, list) else leaf
-                if entry["Type"] == "delete":
-                    del parent[leaf]
-                elif entry["Type"] == "create" and isinstance(
-                    parent, list
-                ) and leaf == len(parent):
-                    parent.append(entry["To"])
-                else:
-                    parent[leaf] = entry["To"]
-            return _json.dumps(doc, separators=(",", ":"), sort_keys=True)
+    return row_udf("string", one)(
+        c.cast("string"), _lit(changelog).cast("string")
+    )
 
-        return pd.Series([one(x, y) for x, y in zip(a, b)])
-
-    return _run(c.cast("string"), _lit(changelog).cast("string"))
 
 
 @method("infer_schema")
@@ -1426,45 +1237,37 @@ def _m_infer_schema(c: Column) -> Column:
     """methods.adoc infer_schema: JSON value → JSON-schema draft
     fragment (type / properties / items, recursive) as a JSON string,
     consumable by the json_schema processor."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("string")
-    def _run(s: pd.Series) -> pd.Series:
-        import json as _json
+    def infer(v):
+        if v is None:
+            return {"type": "null"}
+        if isinstance(v, bool):
+            return {"type": "boolean"}
+        if isinstance(v, int):
+            return {"type": "integer"}
+        if isinstance(v, float):
+            return {"type": "number"}
+        if isinstance(v, str):
+            return {"type": "string"}
+        if isinstance(v, list):
+            out = {"type": "array"}
+            if v:
+                out["items"] = infer(v[0])
+            return out
+        return {
+            "type": "object",
+            "properties": {
+                k: infer(sub) for k, sub in sorted(v.items())
+            },
+        }
 
-        def infer(v):
-            if v is None:
-                return {"type": "null"}
-            if isinstance(v, bool):
-                return {"type": "boolean"}
-            if isinstance(v, int):
-                return {"type": "integer"}
-            if isinstance(v, float):
-                return {"type": "number"}
-            if isinstance(v, str):
-                return {"type": "string"}
-            if isinstance(v, list):
-                out = {"type": "array"}
-                if v:
-                    out["items"] = infer(v[0])
-                return out
-            return {
-                "type": "object",
-                "properties": {
-                    k: infer(sub) for k, sub in sorted(v.items())
-                },
-            }
+    return row_udf(
+        "string",
+        lambda v: json.dumps(
+            infer(json.loads(v)), separators=(",", ":"), sort_keys=True
+        ),
+    )(c.cast("string"))
 
-        return s.map(
-            lambda v: None
-            if v is None
-            else _json.dumps(
-                infer(_json.loads(v)), separators=(",", ":"),
-                sort_keys=True,
-            )
-        )
-
-    return _run(c.cast("string"))
 
 
 @method("json_schema")
@@ -1474,61 +1277,49 @@ def _m_json_schema(c: Column, schema: str) -> Column:
     null so the _error model / DLQ routing can pick them up (the
     processor form in functions/jsonschema.py flags row-level errors
     the same way)."""
-    from pyspark.sql.functions import pandas_udf
+    spec = json.loads(schema)
 
-    @pandas_udf("string")
-    def _run(s: pd.Series) -> pd.Series:
-        import json as _json
-
-        spec = _json.loads(schema)
-
-        def valid(v, sp) -> bool:
-            t = sp.get("type")
-            if t == "object":
-                if not isinstance(v, dict):
+    def valid(v, sp) -> bool:
+        t = sp.get("type")
+        if t == "object":
+            if not isinstance(v, dict):
+                return False
+            for req in sp.get("required", []):
+                if req not in v:
                     return False
-                for req in sp.get("required", []):
-                    if req not in v:
-                        return False
-                for k, sub in sp.get("properties", {}).items():
-                    if k in v and not valid(v[k], sub):
-                        return False
-                return True
-            if t == "array":
-                if not isinstance(v, list):
+            for k, sub in sp.get("properties", {}).items():
+                if k in v and not valid(v[k], sub):
                     return False
-                items = sp.get("items")
-                return not items or all(valid(i, items) for i in v)
-            if t == "string":
-                if not isinstance(v, str):
-                    return False
-                if "pattern" in sp:
-                    import re as _re
-
-                    if not _re.search(sp["pattern"], v):
-                        return False
-                return True
-            if t == "integer":
-                return isinstance(v, int) and not isinstance(v, bool)
-            if t == "number":
-                return isinstance(v, (int, float)) and not isinstance(v, bool)
-            if t == "boolean":
-                return isinstance(v, bool)
-            if t == "null":
-                return v is None
-            if "enum" in sp:
-                return v in sp["enum"]
             return True
+        if t == "array":
+            if not isinstance(v, list):
+                return False
+            items = sp.get("items")
+            return not items or all(valid(i, items) for i in v)
+        if t == "string":
+            if not isinstance(v, str):
+                return False
+            if "pattern" in sp and not re.search(sp["pattern"], v):
+                return False
+            return True
+        if t == "integer":
+            return isinstance(v, int) and not isinstance(v, bool)
+        if t == "number":
+            return isinstance(v, (int, float)) and not isinstance(v, bool)
+        if t == "boolean":
+            return isinstance(v, bool)
+        if t == "null":
+            return v is None
+        if "enum" in sp:
+            return v in sp["enum"]
+        return True
 
-        def one(v):
-            if v is None:
-                return None
-            try:
-                doc = _json.loads(v)
-            except Exception:  # noqa: BLE001
-                return None
-            return v if valid(doc, spec) else None
+    def one(v):
+        try:
+            doc = json.loads(v)
+        except Exception:  # noqa: BLE001
+            return None
+        return v if valid(doc, spec) else None
 
-        return s.map(one)
+    return row_udf("string", one)(c.cast("string"))
 
-    return _run(c.cast("string"))

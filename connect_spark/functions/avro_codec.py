@@ -10,7 +10,7 @@ fixed, enum, array, map, record, and unions. Logical types pass
 through their base types (the reference does the same for times as
 strings, processor.go avro_raw_json).
 
-Spark integration is Arrow-batched `pandas_udf`s (binary → JSON string
+Spark integration is Arrow-batched `row_udf`s (binary → JSON string
 and back) — the sanctioned slow path for byte-level codecs; the
 decoded JSON is then `from_json`-typed so everything downstream stays
 Column algebra.
@@ -22,10 +22,10 @@ import json
 import struct as _struct
 from io import BytesIO
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from connect_spark.boundary import row_udf
 
 # ---------------------------------------------------------------- write
 
@@ -314,29 +314,17 @@ def avro_encode_udf(schema_json: str):
         _encode(buf, json.loads(x), schema)
         return buf.getvalue()
 
-    @pandas_udf("binary")
-    def _enc(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: _one(x) if x is not None else None)
-
-    return _enc
+    return row_udf("binary", _one)
 
 
 def avro_decode_udf(schema_json: str):
     """Avro binary column → JSON string column under `schema_json`.
     Pair with `F.from_json` to land typed columns."""
     schema = resolve_names(json.loads(schema_json))
-
-    @pandas_udf("string")
-    def _dec(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda b: json.dumps(
-                _decode(BytesIO(bytes(b)), schema), sort_keys=True
-            )
-            if b is not None
-            else None
-        )
-
-    return _dec
+    return row_udf(
+        "string",
+        lambda b: json.dumps(_decode(BytesIO(bytes(b)), schema), sort_keys=True),
+    )
 
 
 def avro_decode(col: Column, schema_json: str, spark_type: str) -> Column:
@@ -617,12 +605,9 @@ def avro_resolved_decode_udf(writer_json: str, reader_json: str):
     `reader_json` (schema resolution applied per record)."""
     writer = resolve_names(json.loads(writer_json))
     reader = resolve_names(json.loads(reader_json))
-
-    @pandas_udf("string")
-    def _dec(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda b: None if b is None else json.dumps(
-                _decode_resolved(BytesIO(bytes(b)), writer, reader))
-        )
-
-    return _dec
+    return row_udf(
+        "string",
+        lambda b: json.dumps(
+            _decode_resolved(BytesIO(bytes(b)), writer, reader)
+        ),
+    )

@@ -1,7 +1,7 @@
 """Format & parsing processors (SURVEY.md §2.F) re-expressed for Spark.
 
 - compress/decompress (docs/.../processors/{compress,decompress}.adoc:26):
-  gzip/zlib/bz2/lzma via Arrow-batched pandas UDFs (Python stdlib
+  gzip/zlib/bz2/lzma via Arrow-batched `row_udf`s (Python stdlib
   codecs — the UDF tail is the right place for byte-level codecs; file
   level compression stays on the native parquet/csv codec options).
 - grok (docs/.../processors/grok.adoc:26): %{PATTERN:name} compiled to
@@ -19,10 +19,10 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from connect_spark.boundary import row_udf
 
 # --- compress / decompress ---
 
@@ -70,22 +70,12 @@ def _codec_fns(codec: str, direction: str):
 def compress_udf(codec: str = "gzip"):
     """Arrow-batched bytes→bytes compression column function."""
     fn = _codec_fns(codec, "compress")
-
-    @pandas_udf("binary")
-    def _compress(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: None if b is None else fn(bytes(b)))
-
-    return _compress
+    return row_udf("binary", lambda b: fn(bytes(b)))
 
 
 def decompress_udf(codec: str = "gzip"):
     fn = _codec_fns(codec, "decompress")
-
-    @pandas_udf("binary")
-    def _decompress(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: None if b is None else fn(bytes(b)))
-
-    return _decompress
+    return row_udf("binary", lambda b: fn(bytes(b)))
 
 
 # --- grok ---

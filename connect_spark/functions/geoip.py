@@ -22,10 +22,10 @@ import ipaddress
 import json
 import struct as _struct
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from connect_spark.boundary import row_udf
 
 _METADATA_MARKER = b"\xab\xcd\xefMaxMind.com"
 
@@ -273,24 +273,14 @@ class MmdbWriter:
 
 
 def geoip_udf(mmdb_bytes: bytes):
-    """ip string column → full record JSON (null on miss)."""
+    """ip string column → full record JSON (null on miss or a bad IP)."""
+    reader = MmdbReader(mmdb_bytes)
 
-    @pandas_udf("string")
-    def _geoip(s: pd.Series) -> pd.Series:
-        reader = MmdbReader(mmdb_bytes)
+    def one(ip):
+        rec = reader.lookup(ip)
+        return json.dumps(rec, sort_keys=True) if rec is not None else None
 
-        def one(ip):
-            if ip is None:
-                return None
-            try:
-                rec = reader.lookup(ip)
-            except ValueError:
-                return None
-            return json.dumps(rec, sort_keys=True) if rec is not None else None
-
-        return s.map(one)
-
-    return _geoip
+    return row_udf("string", one, (ValueError,))
 
 
 def geoip_country(col: Column, mmdb_bytes: bytes) -> Column:

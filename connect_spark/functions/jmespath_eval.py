@@ -6,8 +6,8 @@ with the resulting document."  Unlike jq (functions/jq.py), a JMESPath
 query always yields exactly ONE result (possibly null), so there is no
 batch expansion — the UDF is string → string.
 
-Evaluation is Arrow-batched (pandas UDF): the query compiles once per
-executor (lru_cache) and runs over each batch row; the jmespath
+Evaluation is Arrow-batched (`boundary.row_udf`): the query compiles
+once per executor (lru_cache) and runs over each row; the jmespath
 package is pure Python and ships with the container's Python
 distribution.  Import is gated so environments without it fail with a
 clear message at UDF build time, not mid-job.
@@ -18,8 +18,7 @@ from __future__ import annotations
 import json
 from functools import lru_cache
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+from connect_spark.boundary import row_udf
 
 try:  # import-try gate (container provides jmespath 1.x)
     import jmespath as _jmespath
@@ -47,21 +46,11 @@ def jmespath_udf(query: str):
     if _jmespath is None:
         raise RuntimeError("jmespath package not available")
     _compiled(query)  # validate driver-side: bad queries fail at build
-
-    @pandas_udf("string")
-    def _run(s: pd.Series) -> pd.Series:
-        expr = _compiled(query)
-
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return json.dumps(
-                    expr.search(json.loads(v)), separators=(",", ":")
-                )
-            except Exception:  # noqa: BLE001 — flagged upstream
-                return None
-
-        return s.map(one)
-
-    return _run
+    # failures → null, flagged upstream
+    return row_udf(
+        "string",
+        lambda v: json.dumps(
+            _compiled(query).search(json.loads(v)), separators=(",", ":")
+        ),
+        (Exception,),
+    )

@@ -15,7 +15,7 @@ jq.adoc — gojq over each message). Implemented surface:
   comparisons, ``and`` / ``or``
 - alternative operator ``//``
 
-Evaluation is per message in an Arrow-batched pandas UDF; a filter can
+Evaluation is per message in an Arrow-batched `row_udf`; a filter can
 emit 0..n outputs, so the UDF returns ``array<string>`` and the
 pipeline processor explodes it (batch expansion, exactly the
 reference's behavior).
@@ -26,8 +26,7 @@ from __future__ import annotations
 import json
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+from connect_spark.boundary import row_udf
 
 _TOK = re.compile(
     r"""
@@ -502,19 +501,8 @@ class JqFilter:
 
 def jq_udf(filter_src: str):
     """JSON string column → array<string> of output documents."""
-
-    @pandas_udf("array<string>")
-    def _jq(s: pd.Series) -> pd.Series:
-        filt = JqFilter(filter_src)
-
-        def one(x):
-            if x is None:
-                return None
-            try:
-                return filt.run_json(x)
-            except (_JqError, ValueError, KeyError, TypeError):
-                return None
-
-        return s.map(one)
-
-    return _jq
+    return row_udf(
+        "array<string>",
+        JqFilter(filter_src).run_json,
+        (_JqError, ValueError, KeyError, TypeError),
+    )

@@ -1,10 +1,12 @@
-"""JWT HS256 sign/parse (methods.adoc:3982-4491 parse_jwt_hs*/
-sign_jwt_hs* — reference internal/impl/crypto/jwt_{parse,sign}.go).
+"""JWT sign/parse for the HS, RS and ES families at 256/384/512 bits
+(methods.adoc:3982-4491 parse_jwt_*/sign_jwt_* — reference
+internal/impl/crypto/jwt_{parse,sign}.go).
 
-HS256 is HMAC-SHA256 over base64url segments — implementable with the
-Python stdlib (no pyjwt needed), Arrow-batched. RS/ES variants need
-asymmetric-crypto libs not present in this container and raise a clear
-error."""
+Stdlib only, Arrow-batched through `boundary.row_udf`: HMAC for HS,
+RSASSA-PKCS1-v1_5 (RFC 8017) for RS, and ECDSA with RFC 6979 nonces
+(functions/ecdsa.py) for ES. Each family has one sign and one parse
+function; a parse checks the header `alg`, and a token with the wrong
+alg, a bad signature or a malformed shape parses to null."""
 
 from __future__ import annotations
 
@@ -12,10 +14,11 @@ import base64
 import hashlib
 import hmac
 import json
+from typing import Callable
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
+
+from connect_spark.boundary import row_udf
 
 
 def _b64url(data: bytes) -> str:
@@ -24,87 +27,6 @@ def _b64url(data: bytes) -> str:
 
 def _b64url_decode(s: str) -> bytes:
     return base64.urlsafe_b64decode(s + "=" * (-len(s) % 4))
-
-
-def sign_jwt_hs256(claims_json: Column, secret: str) -> Column:
-    """Sign a JSON-string claims column → compact JWT."""
-
-    header = _b64url(json.dumps({"alg": "HS256", "typ": "JWT"},
-                                separators=(",", ":")).encode())
-
-    @pandas_udf("string")
-    def _sign(s: pd.Series) -> pd.Series:
-        def one(claims: str | None) -> str | None:
-            if claims is None:
-                return None
-            payload = _b64url(
-                json.dumps(json.loads(claims), separators=(",", ":"),
-                           sort_keys=True).encode()
-            )
-            signing_input = f"{header}.{payload}".encode()
-            sig = hmac.new(secret.encode(), signing_input,
-                           hashlib.sha256).digest()
-            return f"{header}.{payload}.{_b64url(sig)}"
-
-        return s.map(one)
-
-    return _sign(claims_json)
-
-
-def parse_jwt_hs256(token: Column, secret: str) -> Column:
-    """Verify + decode → claims JSON string; invalid signature/shape →
-    null (pair with flag_error for the reference's error contract)."""
-
-    @pandas_udf("string")
-    def _parse(s: pd.Series) -> pd.Series:
-        def one(tok: str | None) -> str | None:
-            if tok is None:
-                return None
-            try:
-                header_b64, payload_b64, sig_b64 = tok.split(".")
-                signing_input = f"{header_b64}.{payload_b64}".encode()
-                expect = hmac.new(secret.encode(), signing_input,
-                                  hashlib.sha256).digest()
-                if not hmac.compare_digest(expect, _b64url_decode(sig_b64)):
-                    return None
-                return _b64url_decode(payload_b64).decode()
-            except Exception:  # noqa: BLE001 — malformed token → null
-                return None
-
-        return s.map(one)
-
-    return _parse(token)
-
-
-# --------------------------------------------------------------- RS256
-# RSASSA-PKCS1-v1_5 with SHA-256, stdlib-only: signing is
-# pow(EM, d, n); verification is pow(sig, e, n) == EM. EM = 0x00 0x01
-# PS(0xFF..) 0x00 || DigestInfo(SHA-256) || hash per RFC 8017 §9.2.
-
-_SHA256_DIGEST_INFO = bytes.fromhex(
-    "3031300d060960864801650304020105000420"
-)
-
-
-def _emsa_pkcs1_v15(msg: bytes, em_len: int) -> bytes:
-    h = hashlib.sha256(msg).digest()
-    t = _SHA256_DIGEST_INFO + h
-    ps = b"\xff" * (em_len - len(t) - 3)
-    return b"\x00\x01" + ps + b"\x00" + t
-
-
-def rsa_sign_pkcs1_sha256(msg: bytes, n: int, d: int) -> bytes:
-    k = (n.bit_length() + 7) // 8
-    em = int.from_bytes(_emsa_pkcs1_v15(msg, k), "big")
-    return pow(em, d, n).to_bytes(k, "big")
-
-
-def rsa_verify_pkcs1_sha256(msg: bytes, sig: bytes, n: int, e: int) -> bool:
-    k = (n.bit_length() + 7) // 8
-    if len(sig) != k:
-        return False
-    em = pow(int.from_bytes(sig, "big"), e, n).to_bytes(k, "big")
-    return hmac.compare_digest(em, _emsa_pkcs1_v15(msg, k))
 
 
 # Minimal DER walk for RSA public keys (PKCS#1 RSAPublicKey or X.509
@@ -139,133 +61,6 @@ def rsa_public_from_pem(pem: str) -> tuple[int, int]:
     return int.from_bytes(first, "big"), int.from_bytes(e_bytes, "big")
 
 
-def sign_jwt_rs256(claims_json: Column, n: int, d: int) -> Column:
-    """Sign a JSON-string claims column → compact RS256 JWT
-    (sign_jwt_rs256 method, internal/impl/crypto/jwt_sign.go)."""
-    header = _b64url(
-        json.dumps({"alg": "RS256", "typ": "JWT"},
-                   separators=(",", ":")).encode()
-    )
-
-    @pandas_udf("string")
-    def _sign(s: pd.Series) -> pd.Series:
-        def one(claims: str | None) -> str | None:
-            if claims is None:
-                return None
-            payload = _b64url(
-                json.dumps(json.loads(claims), separators=(",", ":"),
-                           sort_keys=True).encode()
-            )
-            signing_input = f"{header}.{payload}".encode()
-            sig = rsa_sign_pkcs1_sha256(signing_input, n, d)
-            return f"{header}.{payload}.{_b64url(sig)}"
-
-        return s.map(one)
-
-    return _sign(claims_json)
-
-
-# --------------------------------------------------------------- ES256
-
-
-def sign_jwt_es256(claims_json: Column, d: int) -> Column:
-    """ES256 JWT: ECDSA P-256 + SHA-256, raw r||s signature (RFC
-    7518 §3.4), deterministic RFC 6979 nonces."""
-    from connect_spark.functions import ecdsa as ec
-
-    header = _b64url(
-        json.dumps({"alg": "ES256", "typ": "JWT"},
-                   separators=(",", ":")).encode()
-    )
-
-    @pandas_udf("string")
-    def _sign(s: pd.Series) -> pd.Series:
-        def one(claims: str | None) -> str | None:
-            if claims is None:
-                return None
-            payload = _b64url(
-                json.dumps(json.loads(claims), separators=(",", ":"),
-                           sort_keys=True).encode()
-            )
-            r, sv = ec.sign(f"{header}.{payload}".encode(), d)
-            sig = r.to_bytes(32, "big") + sv.to_bytes(32, "big")
-            return f"{header}.{payload}.{_b64url(sig)}"
-
-        return s.map(one)
-
-    return _sign(claims_json)
-
-
-def parse_jwt_es256(token: Column, public_point: tuple[int, int]) -> Column:
-    """Verify + decode an ES256 JWT; bad signature/shape → null."""
-    from connect_spark.functions import ecdsa as ec
-
-    qx, qy = public_point
-
-    @pandas_udf("string")
-    def _parse(s: pd.Series) -> pd.Series:
-        def one(tok: str | None) -> str | None:
-            if tok is None:
-                return None
-            try:
-                header_b64, payload_b64, sig_b64 = tok.split(".")
-                if json.loads(_b64url_decode(header_b64))["alg"] != "ES256":
-                    return None
-                raw = _b64url_decode(sig_b64)
-                if len(raw) != 64:
-                    return None
-                sig = (
-                    int.from_bytes(raw[:32], "big"),
-                    int.from_bytes(raw[32:], "big"),
-                )
-                ok = ec.verify(
-                    f"{header_b64}.{payload_b64}".encode(), sig, (qx, qy)
-                )
-                return _b64url_decode(payload_b64).decode() if ok else None
-            except Exception:  # noqa: BLE001 — malformed token → null
-                return None
-
-        return s.map(one)
-
-    return _parse(token)
-
-
-def parse_jwt_rs256(token: Column, public_key: tuple[int, int] | str) -> Column:
-    """Verify + decode an RS256 JWT → claims JSON; bad signature/shape
-    → null. `public_key` is (n, e) or a PEM string."""
-    if isinstance(public_key, str):
-        n, e = rsa_public_from_pem(public_key)
-    else:
-        n, e = public_key
-
-    @pandas_udf("string")
-    def _parse(s: pd.Series) -> pd.Series:
-        def one(tok: str | None) -> str | None:
-            if tok is None:
-                return None
-            try:
-                header_b64, payload_b64, sig_b64 = tok.split(".")
-                if json.loads(_b64url_decode(header_b64))["alg"] != "RS256":
-                    return None
-                ok = rsa_verify_pkcs1_sha256(
-                    f"{header_b64}.{payload_b64}".encode(),
-                    _b64url_decode(sig_b64),
-                    n,
-                    e,
-                )
-                return _b64url_decode(payload_b64).decode() if ok else None
-            except Exception:  # noqa: BLE001 — malformed token → null
-                return None
-
-        return s.map(one)
-
-    return _parse(token)
-
-
-# ------------------------------------------------- full JOSE matrix
-# HS/RS/ES × 256/384/512 (methods.adoc:3982-4491; reference
-# internal/impl/crypto/jwt_{parse,sign}.go supports the same set).
-
 _HASHES = {
     "256": hashlib.sha256,
     "384": hashlib.sha384,
@@ -294,56 +89,52 @@ def _payload_b64(claims: str) -> str:
     )
 
 
-def sign_jwt_hs(claims_json: Column, secret: str, alg: str = "HS256") -> Column:
-    """HS256/HS384/HS512 signing (sign_jwt_hs* methods)."""
-    bits = alg[2:]
-    h = _HASHES[bits]
+def _signer(alg: str, sign: Callable[[bytes], bytes]):
+    """claims JSON → compact JWT whose signature is `sign(input)`."""
     header = _jose_header(alg)
 
-    @pandas_udf("string")
-    def _sign(s: pd.Series) -> pd.Series:
-        def one(claims: str | None) -> str | None:
-            if claims is None:
-                return None
-            payload = _payload_b64(claims)
-            sig = hmac.new(
-                secret.encode(), f"{header}.{payload}".encode(), h
-            ).digest()
-            return f"{header}.{payload}.{_b64url(sig)}"
+    def one(claims: str) -> str:
+        payload = _payload_b64(claims)
+        sig = sign(f"{header}.{payload}".encode())
+        return f"{header}.{payload}.{_b64url(sig)}"
 
-        return s.map(one)
+    return row_udf("string", one)
 
-    return _sign(claims_json)
+
+def _parser(alg: str, verify: Callable[[bytes, bytes], bool]):
+    """compact JWT → claims JSON when the header names `alg` and
+    `verify(input, signature)` holds; otherwise null."""
+
+    def one(tok: str) -> str | None:
+        header_b64, payload_b64, sig_b64 = tok.split(".")
+        if json.loads(_b64url_decode(header_b64))["alg"] != alg:
+            return None
+        ok = verify(
+            f"{header_b64}.{payload_b64}".encode(), _b64url_decode(sig_b64)
+        )
+        return _b64url_decode(payload_b64).decode() if ok else None
+
+    # malformed token → null
+    return row_udf("string", one, (Exception,))
+
+
+def sign_jwt_hs(claims_json: Column, secret: str, alg: str = "HS256") -> Column:
+    """HS256/HS384/HS512 signing (sign_jwt_hs* methods)."""
+    h = _HASHES[alg[2:]]
+    return _signer(
+        alg, lambda msg: hmac.new(secret.encode(), msg, h).digest()
+    )(claims_json)
 
 
 def parse_jwt_hs(token: Column, secret: str, alg: str = "HS256") -> Column:
     """HS* verify+decode; wrong alg header / bad signature → null."""
-    bits = alg[2:]
-    h = _HASHES[bits]
-
-    @pandas_udf("string")
-    def _parse(s: pd.Series) -> pd.Series:
-        def one(tok: str | None) -> str | None:
-            if tok is None:
-                return None
-            try:
-                header_b64, payload_b64, sig_b64 = tok.split(".")
-                if json.loads(_b64url_decode(header_b64))["alg"] != alg:
-                    return None
-                expect = hmac.new(
-                    secret.encode(),
-                    f"{header_b64}.{payload_b64}".encode(),
-                    h,
-                ).digest()
-                if not hmac.compare_digest(expect, _b64url_decode(sig_b64)):
-                    return None
-                return _b64url_decode(payload_b64).decode()
-            except Exception:  # noqa: BLE001 — malformed token → null
-                return None
-
-        return s.map(one)
-
-    return _parse(token)
+    h = _HASHES[alg[2:]]
+    return _parser(
+        alg,
+        lambda msg, sig: hmac.compare_digest(
+            hmac.new(secret.encode(), msg, h).digest(), sig
+        ),
+    )(token)
 
 
 def _emsa_pkcs1(msg: bytes, em_len: int, bits: str) -> bytes:
@@ -354,6 +145,8 @@ def _emsa_pkcs1(msg: bytes, em_len: int, bits: str) -> bytes:
 
 
 def rsa_sign_pkcs1(msg: bytes, n: int, d: int, bits: str = "256") -> bytes:
+    """RSASSA-PKCS1-v1_5: pow(EM, d, n), EM = 0x00 0x01 PS(0xFF..) 0x00
+    || DigestInfo || hash (RFC 8017 §9.2)."""
     k = (n.bit_length() + 7) // 8
     em = int.from_bytes(_emsa_pkcs1(msg, k, bits), "big")
     return pow(em, d, n).to_bytes(k, "big")
@@ -380,22 +173,9 @@ def sign_jwt_rs(
     else:
         n, d = key
     bits = alg[2:]
-    header = _jose_header(alg)
-
-    @pandas_udf("string")
-    def _sign(s: pd.Series) -> pd.Series:
-        def one(claims: str | None) -> str | None:
-            if claims is None:
-                return None
-            payload = _payload_b64(claims)
-            sig = rsa_sign_pkcs1(
-                f"{header}.{payload}".encode(), n, d, bits
-            )
-            return f"{header}.{payload}.{_b64url(sig)}"
-
-        return s.map(one)
-
-    return _sign(claims_json)
+    return _signer(alg, lambda msg: rsa_sign_pkcs1(msg, n, d, bits))(
+        claims_json
+    )
 
 
 def parse_jwt_rs(
@@ -407,30 +187,12 @@ def parse_jwt_rs(
     else:
         n, e = public_key
     bits = alg[2:]
+    return _parser(
+        alg, lambda msg, sig: rsa_verify_pkcs1(msg, sig, n, e, bits)
+    )(token)
 
-    @pandas_udf("string")
-    def _parse(s: pd.Series) -> pd.Series:
-        def one(tok: str | None) -> str | None:
-            if tok is None:
-                return None
-            try:
-                header_b64, payload_b64, sig_b64 = tok.split(".")
-                if json.loads(_b64url_decode(header_b64))["alg"] != alg:
-                    return None
-                ok = rsa_verify_pkcs1(
-                    f"{header_b64}.{payload_b64}".encode(),
-                    _b64url_decode(sig_b64),
-                    n,
-                    e,
-                    bits,
-                )
-                return _b64url_decode(payload_b64).decode() if ok else None
-            except Exception:  # noqa: BLE001 — malformed token → null
-                return None
 
-        return s.map(one)
-
-    return _parse(token)
+_EC_OCTETS = {"ES256": 32, "ES384": 48, "ES512": 66}
 
 
 def sign_jwt_es(
@@ -450,22 +212,13 @@ def sign_jwt_es(
             )
     else:
         d = key
-    octets = {"ES256": 32, "ES384": 48, "ES512": 66}[alg]
-    header = _jose_header(alg)
+    octets = _EC_OCTETS[alg]
 
-    @pandas_udf("string")
-    def _sign(s: pd.Series) -> pd.Series:
-        def one(claims: str | None) -> str | None:
-            if claims is None:
-                return None
-            payload = _payload_b64(claims)
-            r, sv = E.sign(f"{header}.{payload}".encode(), d, curve)
-            sig = r.to_bytes(octets, "big") + sv.to_bytes(octets, "big")
-            return f"{header}.{payload}.{_b64url(sig)}"
+    def sign(msg: bytes) -> bytes:
+        r, s = E.sign(msg, d, curve)
+        return r.to_bytes(octets, "big") + s.to_bytes(octets, "big")
 
-        return s.map(one)
-
-    return _sign(claims_json)
+    return _signer(alg, sign)(claims_json)
 
 
 def parse_jwt_es(
@@ -483,34 +236,18 @@ def parse_jwt_es(
             )
     else:
         q = public_key
-    octets = {"ES256": 32, "ES384": 48, "ES512": 66}[alg]
+    octets = _EC_OCTETS[alg]
 
-    @pandas_udf("string")
-    def _parse(s: pd.Series) -> pd.Series:
-        def one(tok: str | None) -> str | None:
-            if tok is None:
-                return None
-            try:
-                header_b64, payload_b64, sig_b64 = tok.split(".")
-                if json.loads(_b64url_decode(header_b64))["alg"] != alg:
-                    return None
-                raw = _b64url_decode(sig_b64)
-                if len(raw) != 2 * octets:
-                    return None
-                sig = (
-                    int.from_bytes(raw[:octets], "big"),
-                    int.from_bytes(raw[octets:], "big"),
-                )
-                ok = E.verify(
-                    f"{header_b64}.{payload_b64}".encode(), sig, q, curve
-                )
-                return _b64url_decode(payload_b64).decode() if ok else None
-            except Exception:  # noqa: BLE001 — malformed token → null
-                return None
+    def verify(msg: bytes, raw: bytes) -> bool:
+        if len(raw) != 2 * octets:
+            return False
+        sig = (
+            int.from_bytes(raw[:octets], "big"),
+            int.from_bytes(raw[octets:], "big"),
+        )
+        return E.verify(msg, sig, q, curve)
 
-        return s.map(one)
-
-    return _parse(token)
+    return _parser(alg, verify)(token)
 
 
 # ----------------------------------------- EC / RSA PEM key parsing

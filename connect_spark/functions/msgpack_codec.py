@@ -8,7 +8,7 @@ int64/uint64), float32/64, fixstr/str8/16/32, bin8/16/32, fixarray/
 array16/32, fixmap/map16/32. Extension types are out of scope (the
 reference's JSON bridge can't represent them either).
 
-Spark integration mirrors the avro codec: Arrow-batched pandas UDFs
+Spark integration mirrors the avro codec: Arrow-batched `row_udf`s
 between JSON strings and msgpack binary.
 """
 
@@ -18,10 +18,10 @@ import json
 import struct as _struct
 from io import BytesIO
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from connect_spark.boundary import row_udf
 
 # ---------------------------------------------------------------- pack
 
@@ -187,38 +187,28 @@ def _unpack(buf: BytesIO):
 
 def msgpack_encode_udf():
     """JSON string column → msgpack binary (`msgpack` from_json op)."""
-
-    @pandas_udf("binary")
-    def _enc(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: packb(json.loads(x)) if x is not None else None)
-
-    return _enc
+    return row_udf("binary", lambda x: packb(json.loads(x)))
 
 
 def msgpack_decode_udf():
     """msgpack binary column → JSON string (`msgpack` to_json op)."""
 
-    @pandas_udf("string")
-    def _dec(s: pd.Series) -> pd.Series:
-        def bridge(v):
-            # bin8/16/32 payloads decode to raw bytes — JSON needs a
-            # text form; latin-1 is byte-preserving (the same bridge
-            # the avro codec uses)
-            if isinstance(v, bytes):
-                return v.decode("latin-1")
-            if isinstance(v, dict):
-                return {bridge(k): bridge(x) for k, x in v.items()}
-            if isinstance(v, list):
-                return [bridge(x) for x in v]
-            return v
+    def bridge(v):
+        # bin8/16/32 payloads decode to raw bytes — JSON needs a
+        # text form; latin-1 is byte-preserving (the same bridge
+        # the avro codec uses)
+        if isinstance(v, bytes):
+            return v.decode("latin-1")
+        if isinstance(v, dict):
+            return {bridge(k): bridge(x) for k, x in v.items()}
+        if isinstance(v, list):
+            return [bridge(x) for x in v]
+        return v
 
-        return s.map(
-            lambda b: json.dumps(bridge(unpackb(bytes(b))), sort_keys=True)
-            if b is not None
-            else None
-        )
-
-    return _dec
+    return row_udf(
+        "string",
+        lambda b: json.dumps(bridge(unpackb(bytes(b))), sort_keys=True),
+    )
 
 
 def msgpack_decode(col: Column, spark_type: str) -> Column:

@@ -28,10 +28,10 @@ import json
 import struct as _struct
 from io import BytesIO
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from connect_spark.boundary import row_udf
 
 _VARINT_TYPES = {"int32", "int64", "uint32", "uint64", "bool", "enum"}
 _ZIGZAG_TYPES = {"sint32", "sint64"}
@@ -240,29 +240,15 @@ def _jsonable(v):
 
 def protobuf_encode_udf(desc: dict):
     """JSON string column → protobuf binary under `desc`."""
-
-    @pandas_udf("binary")
-    def _enc(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda x: encode(json.loads(x), desc) if x is not None else None
-        )
-
-    return _enc
+    return row_udf("binary", lambda x: encode(json.loads(x), desc))
 
 
 def protobuf_decode_udf(desc: dict):
     """protobuf binary column → JSON string under `desc`."""
-
-    @pandas_udf("string")
-    def _dec(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda b: json.dumps(_jsonable(decode(bytes(b), desc)),
-                                 sort_keys=True)
-            if b is not None
-            else None
-        )
-
-    return _dec
+    return row_udf(
+        "string",
+        lambda b: json.dumps(_jsonable(decode(bytes(b), desc)), sort_keys=True),
+    )
 
 
 def protobuf_decode(col: Column, desc: dict, spark_type: str) -> Column:

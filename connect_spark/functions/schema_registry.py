@@ -17,12 +17,13 @@ way)."""
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
-import pandas as pd  # module-level: pandas_udf type-hint resolution
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from connect_spark.boundary import row_udf
 from connect_spark.errors import flag_error
 
 
@@ -96,55 +97,30 @@ def _resolve_message(proto_messages, indexes: list[int]) -> dict:
 def confluent_protobuf_decode_udf(proto_messages):
     """Arrow-batched UDF: message-index-prefixed protobuf payload →
     JSON string (the serde_protobuf.go decode path)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     from connect_spark.functions import protobuf_codec as pc
 
     msgs = tuple(proto_messages)
 
-    @pandas_udf("string")
-    def _dec(s: pd.Series) -> pd.Series:
-        import json as _json
+    def one(b):
+        data = bytes(b)
+        idx, consumed = read_message_indexes(data)
+        desc = _resolve_message(msgs, idx)
+        return json.dumps(pc.decode(data[consumed:], desc))
 
-        def one(b):
-            if b is None:
-                return None
-            data = bytes(b)
-            idx, consumed = read_message_indexes(data)
-            desc = _resolve_message(msgs, idx)
-            return _json.dumps(pc.decode(data[consumed:], desc))
-
-        return s.map(one)
-
-    return _dec
+    return row_udf("string", one)
 
 
 def confluent_protobuf_encode_udf(proto_messages,
                                   indexes: list[int] | None = None):
     """Arrow-batched UDF: JSON string → message-index-prefixed
     protobuf payload (serde_protobuf.go encode path)."""
-    from pyspark.sql.functions import pandas_udf
-
     from connect_spark.functions import protobuf_codec as pc
 
     idx = list(indexes or [0])
     msgs = tuple(proto_messages)
     desc = _resolve_message(msgs, idx)
     prefix = message_index_bytes(idx)
-
-    @pandas_udf("binary")
-    def _enc(s: pd.Series) -> pd.Series:
-        import json as _json
-
-        def one(v):
-            if v is None:
-                return None
-            return prefix + pc.encode(_json.loads(v), desc)
-
-        return s.map(one)
-
-    return _enc
+    return row_udf("binary", lambda v: prefix + pc.encode(json.loads(v), desc))
 
 _MAX_LEN = (1 << 31) - 1
 

@@ -25,9 +25,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
+
+from connect_spark.boundary import row_udf
 
 _TOKEN_RE = re.compile(
     r"""
@@ -711,20 +711,20 @@ def run_awk(program: str, text: str, fs: str | None = None) -> str:
 
 def awk_udf(program: str, fs: str | None = None):
     """(content, meta) → awk(program, content); Arrow-batched. The
-    program is parsed once per executor, rows stream through the
+    program is parsed once, on the driver, rows stream through the
     interpreter; metadata feeds the reference's metadata_get()."""
+    from pyspark.sql import functions as F
 
-    @pandas_udf("string")
-    def _awk(s, m):
-        prog = AwkProgram(program)
-
-        return pd.Series([
-            prog.run(x, fs=fs, meta=mm if isinstance(mm, dict) else {})
-            if x is not None else None
-            for x, mm in zip(s, m)
-        ], dtype=object)
-
-    return _awk
+    prog = AwkProgram(program)
+    udf = row_udf(
+        "string",
+        lambda x, mm: prog.run(
+            x, fs=fs, meta=mm if isinstance(mm, dict) else {}
+        ),
+    )
+    # a null metadata map reads as an empty one
+    no_meta = F.create_map().cast("map<string,string>")
+    return lambda content, meta: udf(content, F.coalesce(meta, no_meta))
 
 
 def awk_process(df, program: str, col: str = "content", fs: str | None = None) -> "Column":

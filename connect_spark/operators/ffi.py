@@ -23,10 +23,10 @@ import ctypes
 import json
 from functools import lru_cache
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from connect_spark.boundary import row_udf
 
 _RETURN_TYPES = {
     "void": None,
@@ -100,20 +100,15 @@ def ffi_call(
             raise ValueError("out parameters must be pointer types")
     _load(library_path, function_name, ret)  # driver-side fail-fast
 
-    doc = F.to_json(F.struct(*df.columns))
+    from connect_spark.bloblang.pyeval import eval_mapping_value
 
-    @pandas_udf("string")
-    def run(s: pd.Series) -> pd.Series:
-        from connect_spark.bloblang.pyeval import eval_mapping_value
-
+    def one(v):
+        args = eval_mapping_value(args_mapping, json.loads(v))
+        if not isinstance(args, list):
+            raise ValueError("args_mapping must return an array")
+        # _load is cached per worker process
         fn = _load(library_path, function_name, ret)
+        return json.dumps(_call(fn, params, args))
 
-        def one(v):
-            args = eval_mapping_value(args_mapping, json.loads(v))
-            if not isinstance(args, list):
-                raise ValueError("args_mapping must return an array")
-            return json.dumps(_call(fn, params, args))
-
-        return s.map(one)
-
-    return df.withColumn(out, run(doc))
+    doc = F.to_json(F.struct(*df.columns))
+    return df.withColumn(out, row_udf("string", one)(doc))

@@ -35,8 +35,7 @@ import json
 import math
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+from connect_spark.boundary import row_udf
 
 _TOKEN = re.compile(
     r"""
@@ -855,35 +854,28 @@ def run_js(code: str, content: str, meta: dict | None = None) -> tuple[str, dict
 
 def javascript_udf(code: str):
     """content → script-transformed content (Arrow-batched; the script
-    parses once per executor)."""
+    parses once, on the driver)."""
+    interp = Interp(code)
 
-    @pandas_udf("string")
-    def _js(s: pd.Series) -> pd.Series:
-        interp = Interp(code)
+    def one(content):
+        state = {"content": content, "meta": {}}
+        benthos = {
+            "v0_msg_as_string": lambda: state["content"],
+            "v0_msg_set_string": lambda x: state.__setitem__(
+                "content", _js_str(x)
+            ),
+            "v0_msg_as_structured": lambda: json.loads(state["content"]),
+            "v0_msg_set_structured": lambda v: state.__setitem__(
+                "content", json.dumps(_plain(v), sort_keys=True)
+            ),
+            "v0_msg_get_meta": lambda k: state["meta"].get(
+                _js_str(k), UNDEF
+            ),
+            "v0_msg_set_meta": lambda k, v: state["meta"].__setitem__(
+                _js_str(k), _js_str(v)
+            ),
+        }
+        interp.run({**_std_globals(), "benthos": benthos})
+        return state["content"]
 
-        def one(content):
-            if content is None:
-                return None
-            state = {"content": content, "meta": {}}
-            benthos = {
-                "v0_msg_as_string": lambda: state["content"],
-                "v0_msg_set_string": lambda x: state.__setitem__(
-                    "content", _js_str(x)
-                ),
-                "v0_msg_as_structured": lambda: json.loads(state["content"]),
-                "v0_msg_set_structured": lambda v: state.__setitem__(
-                    "content", json.dumps(_plain(v), sort_keys=True)
-                ),
-                "v0_msg_get_meta": lambda k: state["meta"].get(
-                    _js_str(k), UNDEF
-                ),
-                "v0_msg_set_meta": lambda k, v: state["meta"].__setitem__(
-                    _js_str(k), _js_str(v)
-                ),
-            }
-            interp.run({**_std_globals(), "benthos": benthos})
-            return state["content"]
-
-        return s.map(one)
-
-    return _js
+    return row_udf("string", one)

@@ -616,28 +616,21 @@ def _p_unarchive(df: DataFrame, conf: Any) -> DataFrame:
     ]
     if doc_cols == ["content"] and not conf.get("field"):
         if fmt == "json_array":
-            from pyspark.sql.functions import pandas_udf
+            import json
 
-            @pandas_udf("array<string>")
-            def _split_json(s: pd.Series) -> pd.Series:
-                import json as _json
+            from connect_spark.bloblang.pyeval import render_json
+            from connect_spark.boundary import row_udf
 
-                from connect_spark.bloblang.pyeval import render_json
+            def split_json(x):
+                try:
+                    arr = json.loads(x)
+                except Exception:  # noqa: BLE001
+                    return None
+                if not isinstance(arr, list):
+                    return None
+                return [render_json(el) for el in arr]
 
-                def conv(x):
-                    if x is None:
-                        return None
-                    try:
-                        arr = _json.loads(x)
-                    except Exception:  # noqa: BLE001
-                        return None
-                    if not isinstance(arr, list):
-                        return None
-                    return [render_json(el) for el in arr]
-
-                return pd.Series([conv(x) for x in s], dtype=object)
-
-            arr = _split_json(F.col("content"))
+            arr = row_udf("array<string>", split_json)(F.col("content"))
         elif fmt == "lines":
             arr = F.split(F.col("content"), "\n")
         else:

@@ -471,10 +471,7 @@ def _p_protobuf(df: DataFrame, conf: Any) -> DataFrame:
         )
     field = _field(conf)
     if "message" in conf:
-        import json as _json
-
-        from pyspark.sql.functions import pandas_udf
-
+        from connect_spark.boundary import row_udf
         from connect_spark.errors import flag_error
         from connect_spark.functions.proto_schema import (
             from_json_value,
@@ -494,36 +491,26 @@ def _p_protobuf(df: DataFrame, conf: Any) -> DataFrame:
         )
         desc = reg[conf["message"]]
 
-        @pandas_udf("struct<v:string,e:string>")
-        def _conv(s: pd.Series) -> pd.DataFrame:
-            vals, errs = [], []
-            for x in s:
-                try:
-                    if x is None:
-                        vals.append(None)
-                        errs.append(None)
-                        continue
-                    if op == "from_json":
-                        wire = pb_encode(
-                            from_json_value(_json.loads(x), desc), desc
-                        )
-                        vals.append(wire.decode("latin-1"))
-                    else:
-                        doc = to_json_value(
-                            pb_decode(x.encode("latin-1"), desc), desc
-                        )
-                        vals.append(_json.dumps(
-                            doc, separators=(",", ":"),
-                            ensure_ascii=False,
-                        ))
-                    errs.append(None)
-                except Exception as exc:  # noqa: BLE001 — row flag
-                    vals.append(None)
-                    errs.append(str(exc))
-            return pd.DataFrame({"v": vals, "e": errs})
+        def conv(x):
+            try:
+                if op == "from_json":
+                    wire = pb_encode(from_json_value(json.loads(x), desc), desc)
+                    return {"v": wire.decode("latin-1"), "e": None}
+                doc = to_json_value(pb_decode(x.encode("latin-1"), desc), desc)
+                return {
+                    "v": json.dumps(
+                        doc, separators=(",", ":"), ensure_ascii=False
+                    ),
+                    "e": None,
+                }
+            except Exception as exc:  # noqa: BLE001 — row flag
+                return {"v": None, "e": str(exc)}
 
         work = df.withColumn(
-            "_pb", _conv(F.col(field).cast("string"))
+            "_pb",
+            row_udf("struct<v:string,e:string>", conv)(
+                F.col(field).cast("string")
+            ),
         )
         work = flag_error(
             work, F.col("_pb.e").isNotNull(), F.col("_pb.e")
@@ -841,25 +828,22 @@ def _p_wasm(df: DataFrame, conf: Any) -> DataFrame:
     with open(conf["module_path"], "rb") as fh:
         binary = fh.read()
     # validate driver-side: decode + export probe fail fast
+    from connect_spark.boundary import row_udf
     from connect_spark.wasm.host import MessageRunner
 
     MessageRunner(binary, function)
+    runner = None
 
-    @F.pandas_udf("string")
-    def run(s: pd.Series) -> pd.Series:
-        from connect_spark.wasm.host import MessageRunner as _MR
+    def one(v):
+        nonlocal runner
+        if runner is None:  # first row of the task
+            runner = MessageRunner(binary, function)
+        out, _meta = runner.process(str(v).encode())
+        return out.decode("utf-8", "replace")
 
-        runner = _MR(binary, function)
-
-        def one(v):
-            if v is None:
-                return None
-            out, _meta = runner.process(str(v).encode())
-            return out.decode("utf-8", "replace")
-
-        return s.map(one)
-
-    return df.withColumn(field, run(F.col(field).cast("string")))
+    return df.withColumn(
+        field, row_udf("string", one)(F.col(field).cast("string"))
+    )
 
 
 

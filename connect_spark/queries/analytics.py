@@ -512,8 +512,10 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "CAST(53 - m_j AS INT))")).alias("s_present"),
         F.count(F.lit(1)).alias("n_regs"),
     )
-    exact = pairs.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("exact_distinct"))
+    # COUNT(DISTINCT user_id) skips a null user_id; the register leg
+    # keeps it (a NULL-idx register, as HLL_SQL's regs CTE does)
+    exact = pairs.filter(F.col("user_id").isNotNull()).groupBy(
+        "event_type").agg(F.count(F.lit(1)).alias("exact_distinct"))
     j = per_type.join(exact, "event_type")
     s_total = (F.col("s_present")
                + (F.lit(HLL_M) - F.col("n_regs")) * F.lit(_POW53))

@@ -520,9 +520,7 @@ def wasm_transform_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type; the oracle recomputes with upper(). A bug anywhere in
     the binary decoder, interpreter loop, or host memory protocol
     breaks the value hash."""
-    import pandas as pd_  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
-
+    from connect_spark.boundary import row_udf
     from connect_spark.wasm.host import MessageRunner
     from connect_spark.wasm.testmod import uppercase_module
 
@@ -530,29 +528,25 @@ def wasm_transform_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     MessageRunner(binary)  # driver-side fail-fast
 
     ev = load_table(spark, sf_dir, "events")
+    runner = None
+    memo: dict[str, str] = {}
 
-    @pandas_udf("string")
-    def run(s):
-        from connect_spark.wasm.host import MessageRunner as _MR
+    def one(v):
+        nonlocal runner
+        hit = memo.get(v)
+        if hit is None:
+            if runner is None:  # first row of the task
+                runner = MessageRunner(binary)
+            out, _ = runner.process(v.encode())
+            hit = memo[v] = out.decode()
+        return hit
 
-        runner = _MR(binary)
-        memo: dict[str, str] = {}
-
-        def one(v):
-            v = str(v)
-            hit = memo.get(v)
-            if hit is None:
-                out, _ = runner.process(v.encode())
-                hit = memo[v] = out.decode()
-            return hit
-
-        # the demo module is a pure content transform, so per-worker
-        # memoization is sound; every ROW still verifies in the oracle
-        # compare, the interpreter just doesn't re-run duplicates
-        return s.map(one)
-
+    # the demo module is a pure content transform, so per-task
+    # memoization is sound; every ROW still verifies in the oracle
+    # compare, the interpreter just doesn't re-run duplicates
     return ev.select(
-        "event_id", run(F.col("event_type")).alias("wasm_upper")
+        "event_id",
+        row_udf("string", one)(F.col("event_type")).alias("wasm_upper"),
     )
 
 

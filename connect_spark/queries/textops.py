@@ -1785,8 +1785,7 @@ def unicode_segments_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same answer relationally (split on space); the UAX #29 engine
     itself is pinned on Unicode-hard cases in tests/test_segmentation.py.
     """
-    from pyspark.sql.functions import pandas_udf
-
+    from connect_spark.bloblang.methods import METHODS
     from connect_spark.catalog import fanout_scan
 
     # the UAX #29 segmenter is Python CPU per row above an
@@ -1796,13 +1795,8 @@ def unicode_segments_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         sf_dir, "documents")
 
-    @pandas_udf("array<string>")
-    def seg(sr: pd.Series) -> pd.Series:
-        from connect_spark.text.segmentation import unicode_segments
-
-        return sr.map(lambda v: unicode_segments(v, "word"))
-
-    segged = docs.select("doc_id", seg(F.col("text")).alias("segs"))
+    seg = METHODS["unicode_segments"](F.col("text"), "word")
+    segged = docs.select("doc_id", seg.alias("segs"))
     non_space = F.filter(F.col("segs"), lambda x: x != " ")
     return segged.select(
         "doc_id",

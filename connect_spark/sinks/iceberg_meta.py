@@ -514,14 +514,15 @@ def _bucket_column(col, src_t: T.DataType, n: int):
     pandas_udf over the source column.  Fixed 8-byte layouts (int,
     long, date, timestamp) run through the numpy-vectorized murmur3
     kernel; variable-length inputs (string, binary, decimal) hash
-    per-row.  Nulls bucket to null (the null partition), matching
-    Iceberg's null handling.
+    per-row through `boundary.row_udf`.  Nulls bucket to null (the
+    null partition), matching Iceberg's null handling.
 
     Scale: a narrow Arrow-batched map, zero shuffle — the hash itself
     is the cheap part of a bucketed write; partitionBy supplies the
     one shuffle a bucketed layout inherently needs."""
     from pyspark.sql.functions import pandas_udf
 
+    from connect_spark.boundary import row_udf
     from connect_spark.functions.murmur3 import (
         bucket_bytes, bucket_longs_np, iceberg_bucket,
         iceberg_hash_decimal,
@@ -563,33 +564,18 @@ def _bucket_column(col, src_t: T.DataType, n: int):
             return out
         return _b(col)
     if isinstance(src_t, T.StringType):
-        @pandas_udf("int")
-        def _b(s: pd.Series) -> pd.Series:
-            return s.map(
-                lambda v: None if v is None
-                else bucket_bytes(v.encode("utf-8"), n)
-            ).astype("Int32")
-        return _b(col)
+        return row_udf(
+            "int", lambda v: bucket_bytes(v.encode("utf-8"), n)
+        )(col)
     if isinstance(src_t, T.BinaryType):
-        @pandas_udf("int")
-        def _b(s: pd.Series) -> pd.Series:
-            return s.map(
-                lambda v: None if v is None
-                else bucket_bytes(bytes(v), n)
-            ).astype("Int32")
-        return _b(col)
+        return row_udf("int", lambda v: bucket_bytes(bytes(v), n))(col)
     if isinstance(src_t, T.DecimalType):
-        @pandas_udf("int")
-        def _b(s: pd.Series) -> pd.Series:
-            def one(v):
-                if v is None:
-                    return None
-                sign, digits, _exp = v.as_tuple()
-                unscaled = (int("".join(map(str, digits)))
-                            * (-1 if sign else 1))
-                return iceberg_bucket(iceberg_hash_decimal(unscaled), n)
-            return s.map(one).astype("Int32")
-        return _b(col)
+        def one(v):
+            sign, digits, _exp = v.as_tuple()
+            unscaled = (int("".join(map(str, digits)))
+                        * (-1 if sign else 1))
+            return iceberg_bucket(iceberg_hash_decimal(unscaled), n)
+        return row_udf("int", one)(col)
     raise ValueError(
         f"bucket transform does not support {src_t} sources "
         "(spec: int, long, decimal, date, time, timestamp, string, "

@@ -83,8 +83,8 @@ def apply_cdc_batch(cache, changes, key: str, op_col: str = "operation"):
 
     `changes` carries the row image + `operation` metadata
     (input_pg_stream.go:86-89) + a `_seq` ordering column (commit LSN /
-    commit_ts_ms). One upsert + one delete per batch — set-based, no
-    per-row round-trips.
+    commit_ts_ms). The upserts and deletes land in ONE new cache
+    generation per batch — set-based, no per-row round-trips.
 
     Unchanged-TOAST handling (pgoutput tuple category 'u' —
     sources/pgoutput.py::UNCHANGED_TOAST): a string column delivered
@@ -151,8 +151,7 @@ def apply_cdc_batch(cache, changes, key: str, op_col: str = "operation"):
             )
         upserts = upserts.drop(*[f"_prev_{c}" for c in prev_cols])
     deletes = latest.filter(F.col(op_col) == "delete").select(key)
-    cache.set(upserts)
-    cache.delete(deletes)
+    cache._rewrite(upserts, deletes)
 
 
 def snapshot_jdbc_plan(

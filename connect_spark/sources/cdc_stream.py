@@ -528,8 +528,8 @@ def materialize_cdc_stream(
     def _apply(batch: DataFrame, _epoch: int) -> None:
         from connect_spark.sources.cdc import apply_cdc_batch
 
-        # the apply scans the batch several times (upsert, delete);
-        # persisting reads the source once per batch
+        # the apply scans the batch more than once (the upserts, the
+        # deleted keys); persisting reads the source once per batch
         rows = cdc_changes_to_rows(batch, row_schema, key).persist()
         try:
             apply_cdc_batch(cache, rows, key)

@@ -136,14 +136,30 @@ class ParquetKVCache:
         keys WITHIN the batch collapse to one survivor (at-least-once
         streams routinely redeliver) — without this, both copies
         persist and every later lookup join fans out."""
-        rows = self._stamp(rows.dropDuplicates([self.key]), ttl)
+        self._rewrite(rows, None, ttl)
+
+    def _rewrite(
+        self,
+        rows: DataFrame | None,
+        drop: DataFrame | None,
+        ttl: float | None = None,
+    ) -> None:
+        """One new generation: the live entries whose key is neither in
+        `rows` nor in `drop`, plus `rows` (upserted as by set). Upserts
+        and deletes of one batch therefore cost a single rewrite."""
+        if rows is not None:
+            rows = self._stamp(rows.dropDuplicates([self.key]), ttl)
         cur = self._read_live()
         if cur is None:
-            self._write(rows)
+            if rows is not None:
+                self._write(rows)
             return
-        keep = cur.join(
-            rows.select(self.key).distinct(), on=self.key, how="left_anti"
-        )
+        keys = [d.select(self.key) for d in (rows, drop) if d is not None]
+        gone = keys[0] if len(keys) == 1 else keys[0].unionByName(keys[1])
+        keep = cur.join(gone.distinct(), on=self.key, how="left_anti")
+        if rows is None:
+            self._write(keep)
+            return
         # allowMissingColumns: upstream schema evolution (a new column
         # appearing mid-stream — the lakehouse evolution contract) adds
         # the column here with nulls for pre-evolution generations
@@ -177,14 +193,7 @@ class ParquetKVCache:
         return df.join(F.broadcast(renamed), on=on, how="left")
 
     def delete(self, keys: DataFrame) -> None:
-        cur = self._read_live()
-        if cur is None:
-            return
-        self._write(
-            cur.join(
-                keys.select(self.key).distinct(), on=self.key, how="left_anti"
-            )
-        )
+        self._rewrite(None, keys)
 
     def vacuum(self, keep_last: int = 2) -> None:
         """Drop old generations (the compaction knob)."""

@@ -31,7 +31,6 @@ from collections import Counter
 from functools import lru_cache
 from typing import Iterable
 
-import pandas as pd
 
 # --- byte <-> unicode (public GPT-2 construction) ---
 
@@ -215,32 +214,33 @@ def default_tokenizer() -> BPETokenizer:
 # --- Spark integration ---
 
 
-def bpe_count_udf(spark, merges: list[tuple[str, str]] | None = None):
-    """bigint pandas UDF counting BPE tokens; the merge table is a
-    broadcast variable — one copy per executor, Arrow-batched apply."""
+def _tokenizer_udf(spark, merges, return_type: str, op: str):
+    """Column function applying `BPETokenizer.<op>` per row; the merge
+    table is a broadcast variable — one copy per executor, one
+    tokenizer per task. A null text reads as "" (0 tokens, [])."""
     from pyspark.sql import functions as F
+
+    from connect_spark.boundary import row_udf
 
     merges = merges if merges is not None else default_tokenizer().merges
     bc = spark.sparkContext.broadcast(merges)
+    tok = None
 
-    @F.pandas_udf("bigint")
-    def _count(s: pd.Series) -> pd.Series:
-        tok = BPETokenizer(bc.value)
-        return s.map(lambda t: tok.count(t) if t is not None else 0)
+    def one(t):
+        nonlocal tok
+        if tok is None:  # first row of the task
+            tok = BPETokenizer(bc.value)
+        return getattr(tok, op)(t)
 
-    return _count
+    udf = row_udf(return_type, one)
+    return lambda col: udf(F.coalesce(col, F.lit("")))
+
+
+def bpe_count_udf(spark, merges: list[tuple[str, str]] | None = None):
+    """bigint column function counting BPE tokens."""
+    return _tokenizer_udf(spark, merges, "bigint", "count")
 
 
 def bpe_encode_udf(spark, merges: list[tuple[str, str]] | None = None):
-    """array<string> pandas UDF returning the BPE token sequence."""
-    from pyspark.sql import functions as F
-
-    merges = merges if merges is not None else default_tokenizer().merges
-    bc = spark.sparkContext.broadcast(merges)
-
-    @F.pandas_udf("array<string>")
-    def _encode(s: pd.Series) -> pd.Series:
-        tok = BPETokenizer(bc.value)
-        return s.map(lambda t: tok.encode(t) if t is not None else [])
-
-    return _encode
+    """array<string> column function returning the BPE token sequence."""
+    return _tokenizer_udf(spark, merges, "array<string>", "encode")

@@ -28,29 +28,24 @@ O(n_merges x vocab), independent of corpus size.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def _symbols_udf():
+    from connect_spark.boundary import row_udf
     from connect_spark.text.bpe import bytes_to_unicode, pretokenize
 
-    @F.pandas_udf("array<array<string>>")
-    def _syms(s: pd.Series) -> pd.Series:
-        b2u = bytes_to_unicode()
-
-        def one(t):
-            if t is None:
-                return []
-            return [
-                [b2u[b] for b in piece.encode("utf-8")]
-                for piece in pretokenize(t)
-            ]
-
-        return s.map(one)
-
-    return _syms
+    b2u = bytes_to_unicode()
+    udf = row_udf(
+        "array<array<string>>",
+        lambda t: [
+            [b2u[b] for b in piece.encode("utf-8")]
+            for piece in pretokenize(t)
+        ],
+    )
+    # a null document has no pieces
+    return lambda col: udf(F.coalesce(col, F.lit("")))
 
 
 def word_counts_df(df: DataFrame, col: str) -> DataFrame:

@@ -16,9 +16,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
+
+from connect_spark.boundary import row_udf
 
 DEFAULT_SEPARATORS = ["\n\n", "\n", " ", ""]
 
@@ -136,30 +136,18 @@ def recursive_chunks_udf(
 ):
     """Column of text → array<string> of recursive-character chunks."""
     seps = list(separators) if separators is not None else None
-
-    @pandas_udf("array<string>")
-    def _chunks(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda t: split_recursive(t, seps, chunk_size, chunk_overlap)
-            if t is not None
-            else None
-        )
-
-    return _chunks
+    return row_udf(
+        "array<string>",
+        lambda t: split_recursive(t, seps, chunk_size, chunk_overlap),
+    )
 
 
 def markdown_chunks_udf(chunk_size: int = 512, chunk_overlap: int = 100):
     """Column of markdown → array<struct<header,body>> sections."""
-
-    @pandas_udf("array<struct<header: string, body: string>>")
-    def _chunks(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda t: split_markdown(t, chunk_size, chunk_overlap)
-            if t is not None
-            else None
-        )
-
-    return _chunks
+    return row_udf(
+        "array<struct<header: string, body: string>>",
+        lambda t: split_markdown(t, chunk_size, chunk_overlap),
+    )
 
 
 def chunk_column(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -9,12 +10,15 @@ import pytest
 # 12-90 MB/s with multi-minute degradation bursts (SCALE.md), and the
 # suite's table-roundtrip tests (iceberg, CDC, migrator) are otherwise
 # device-bound.  Only applied when the caller hasn't pinned TMPDIR and
-# /dev/shm is writable; test semantics are unchanged — the same files
-# are written, to RAM.
+# /dev/shm is writable with room for the suite's peak scratch use;
+# test semantics are unchanged — the same files are written, to RAM.
+# Each run gets its own directory, removed when the session ends.
+_SCRATCH_PEAK_BYTES = 32 << 20  # measured peak: 23 MB
+_scratch = None
 if "TMPDIR" not in os.environ and os.path.isdir("/dev/shm") \
-        and os.access("/dev/shm", os.W_OK):
-    _scratch = "/dev/shm/connect_spark_test_scratch"
-    os.makedirs(_scratch, exist_ok=True)
+        and os.access("/dev/shm", os.W_OK) \
+        and shutil.disk_usage("/dev/shm").free >= _SCRATCH_PEAK_BYTES:
+    _scratch = tempfile.mkdtemp(prefix="connect_spark_test_", dir="/dev/shm")
     os.environ["TMPDIR"] = _scratch
     tempfile.tempdir = None  # re-resolve gettempdir() from TMPDIR
 
@@ -48,3 +52,8 @@ def sf_dir() -> str:
     # SPARK_GRAFT_TEST_SF=/root/testdata/sf0.01 runs the parity gate at
     # the driver's correctness scale factor.
     return os.environ.get("SPARK_GRAFT_TEST_SF", SF_SMALL)
+
+
+def pytest_unconfigure(config):
+    if _scratch is not None:
+        shutil.rmtree(_scratch, ignore_errors=True)

@@ -1,5 +1,7 @@
-"""RS256 JWT sign/verify — stdlib RSA (RFC 8017 PKCS#1 v1.5), key
-generated in-test with Miller-Rabin primes (deterministic seed)."""
+"""RS256/ES256 JWT sign/verify through the family functions
+(`sign/parse_jwt_rs`, `sign/parse_jwt_es`) — stdlib RSA (RFC 8017
+PKCS#1 v1.5), key generated in-test with Miller-Rabin primes
+(deterministic seed)."""
 
 from __future__ import annotations
 
@@ -12,11 +14,11 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from connect_spark.functions.jwt_hs import (
-    parse_jwt_rs256,
+    parse_jwt_rs,
     rsa_public_from_pem,
-    rsa_sign_pkcs1_sha256,
-    rsa_verify_pkcs1_sha256,
-    sign_jwt_rs256,
+    rsa_sign_pkcs1,
+    rsa_verify_pkcs1,
+    sign_jwt_rs,
 )
 
 
@@ -63,21 +65,21 @@ def rsa_key():
 
 def test_rsa_primitive_roundtrip(rsa_key):
     n, e, d = rsa_key
-    sig = rsa_sign_pkcs1_sha256(b"hello", n, d)
-    assert rsa_verify_pkcs1_sha256(b"hello", sig, n, e)
-    assert not rsa_verify_pkcs1_sha256(b"hellO", sig, n, e)
-    assert not rsa_verify_pkcs1_sha256(b"hello", sig[:-1] + b"\x00", n, e)
+    sig = rsa_sign_pkcs1(b"hello", n, d, "256")
+    assert rsa_verify_pkcs1(b"hello", sig, n, e, "256")
+    assert not rsa_verify_pkcs1(b"hellO", sig, n, e, "256")
+    assert not rsa_verify_pkcs1(b"hello", sig[:-1] + b"\x00", n, e, "256")
 
 
 def test_jwt_rs256_sign_and_parse(spark, rsa_key):
     n, e, d = rsa_key
     df = spark.createDataFrame([Row(claims='{"sub": "u1", "x": 2}')])
-    tok = df.select(sign_jwt_rs256(F.col("claims"), n, d).alias("tok"))
+    tok = df.select(sign_jwt_rs(F.col("claims"), (n, d), "RS256").alias("tok"))
     parsed = tok.select(
-        parse_jwt_rs256(F.col("tok"), (n, e)).alias("claims"),
-        parse_jwt_rs256(F.col("tok"), (n + 2, e)).alias("bad_key"),
-        parse_jwt_rs256(
-            F.concat(F.lit("x"), F.col("tok")), (n, e)
+        parse_jwt_rs(F.col("tok"), (n, e), "RS256").alias("claims"),
+        parse_jwt_rs(F.col("tok"), (n + 2, e), "RS256").alias("bad_key"),
+        parse_jwt_rs(
+            F.concat(F.lit("x"), F.col("tok")), (n, e), "RS256"
         ).alias("tampered"),
     ).collect()[0]
     assert json.loads(parsed.claims) == {"sub": "u1", "x": 2}
@@ -150,17 +152,17 @@ def test_ecdsa_p256_rfc6979_vector():
 
 def test_jwt_es256_sign_and_parse(spark):
     from connect_spark.functions import ecdsa as ec
-    from connect_spark.functions.jwt_hs import parse_jwt_es256, sign_jwt_es256
+    from connect_spark.functions.jwt_hs import parse_jwt_es, sign_jwt_es
 
     d = 0xC9AFA9D845BA75166B5C215767B1D6934E50C3DB36E89B127B8A622B120F6721
     q = ec.public_key(d)
     other_q = ec.public_key(d + 1)
 
     df = spark.createDataFrame([Row(claims='{"sub": "es", "ok": true}')])
-    tok = df.select(sign_jwt_es256(F.col("claims"), d).alias("tok"))
+    tok = df.select(sign_jwt_es(F.col("claims"), d, "ES256").alias("tok"))
     parsed = tok.select(
-        parse_jwt_es256(F.col("tok"), q).alias("claims"),
-        parse_jwt_es256(F.col("tok"), other_q).alias("wrong_key"),
+        parse_jwt_es(F.col("tok"), q, "ES256").alias("claims"),
+        parse_jwt_es(F.col("tok"), other_q, "ES256").alias("wrong_key"),
     ).collect()[0]
     assert json.loads(parsed.claims) == {"sub": "es", "ok": True}
     assert parsed.wrong_key is None

@@ -82,6 +82,35 @@ def test_apply_cdc_batch(spark, tmp_path):
     assert got == {1: "a2", 3: "c"}
 
 
+def test_apply_cdc_batch_writes_one_generation(spark, tmp_path):
+    """An insert, an update and a delete in one batch land in ONE new
+    state generation, holding the rows that an upsert followed by a
+    delete (two generations) leaves."""
+    seed = spark.createDataFrame(
+        [Row(id=1, val="a"), Row(id=2, val="b"), Row(id=3, val="c")]
+    )
+    batch = spark.createDataFrame(
+        [
+            Row(id=4, val="d", operation="insert", _seq=1),
+            Row(id=1, val="a2", operation="update", _seq=2),
+            Row(id=2, val=None, operation="delete", _seq=3),
+        ]
+    )
+    cache = ParquetKVCache(spark, str(tmp_path / "one"), key="id")
+    cache.set(seed)
+    before = cache._latest()
+    apply_cdc_batch(cache, batch, key="id")
+    assert cache._latest() == before + 1
+
+    two = ParquetKVCache(spark, str(tmp_path / "two"), key="id")
+    two.set(seed)
+    two.set(batch.filter("operation != 'delete'").drop("operation", "_seq"))
+    two.delete(batch.filter("operation = 'delete'").select("id"))
+    assert sorted(map(tuple, cache.read().collect())) == sorted(
+        map(tuple, two.read().collect())
+    ) == [(1, "a2"), (3, "c"), (4, "d")]
+
+
 def test_training_pipeline_composition(spark):
     """chunk → embed → exact-dedup → quality-filter, composed — the
     LLM-data-pipeline shape end to end."""
@@ -217,19 +246,19 @@ def test_string_split_and_try_catch_processors(spark):
 
 
 def test_jwt_hs256_roundtrip(spark):
-    from connect_spark.functions.jwt_hs import parse_jwt_hs256, sign_jwt_hs256
+    from connect_spark.functions.jwt_hs import parse_jwt_hs, sign_jwt_hs
 
     df = spark.createDataFrame(
         [Row(claims='{"sub": "u1", "n": 7}'), Row(claims='{"sub": "u2"}')]
     )
     signed = df.select(
-        "claims", sign_jwt_hs256(F.col("claims"), "secret").alias("tok")
+        "claims", sign_jwt_hs(F.col("claims"), "secret", "HS256").alias("tok")
     )
     back = signed.select(
         "claims",
-        parse_jwt_hs256(F.col("tok"), "secret").alias("decoded"),
-        parse_jwt_hs256(F.col("tok"), "WRONG").alias("bad_key"),
-        parse_jwt_hs256(F.lit("not.a.jwt"), "secret").alias("malformed"),
+        parse_jwt_hs(F.col("tok"), "secret", "HS256").alias("decoded"),
+        parse_jwt_hs(F.col("tok"), "WRONG", "HS256").alias("bad_key"),
+        parse_jwt_hs(F.lit("not.a.jwt"), "secret", "HS256").alias("malformed"),
     )
     import json
 
