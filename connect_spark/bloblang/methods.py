@@ -1051,16 +1051,9 @@ def _geoip_method(field_path: tuple[str, ...] | None):
     once per executor worker (cache keyed on path) and the looked-up
     record — or one field path of it — returns as JSON."""
 
-    from connect_spark.functions.geoip import MmdbReader
-
     def impl(c: Column, mmdb_path: str) -> Column:
         def one(ip):
-            rdr = _GEOIP_READERS.get(mmdb_path)
-            if rdr is None:
-                with open(mmdb_path, "rb") as fh:
-                    rdr = _GEOIP_READERS.setdefault(
-                        mmdb_path, MmdbReader(fh.read())
-                    )
+            rdr = _geoip_reader(mmdb_path)
             try:
                 rec = rdr.lookup(ip)
             except Exception:  # noqa: BLE001 - bad IP → null
@@ -1082,6 +1075,19 @@ def _geoip_method(field_path: tuple[str, ...] | None):
 
 
 _GEOIP_READERS: dict[str, object] = {}
+
+
+def _geoip_reader(path: str):
+    """The MMDB reader for `path`, opened once per worker process.  A
+    module-level function pickles by reference, so the UDF closure
+    reaches this module's cache instead of a per-task copy of it."""
+    rdr = _GEOIP_READERS.get(path)
+    if rdr is None:
+        from connect_spark.functions.geoip import MmdbReader
+
+        with open(path, "rb") as fh:
+            rdr = _GEOIP_READERS.setdefault(path, MmdbReader(fh.read()))
+    return rdr
 
 method("geoip_city")(_geoip_method(None))
 method("geoip_country")(_geoip_method(("country",)))

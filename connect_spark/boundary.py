@@ -1,9 +1,11 @@
 """The per-row Python boundary.
 
 Codecs, crypto and interpreters that have no JVM form run in Python,
-one message at a time, inside an Arrow-batched scalar pandas UDF.
-`row_udf` is the one place that batch loop, its null guard and its
-error-to-null policy are written:
+one message at a time, inside an Arrow-batched pandas UDF. This module
+is the one place those batch loops are written.
+
+`row_udf` maps one row to one value (a scalar pandas UDF) and owns its
+null guard and error-to-null policy:
 
 - a row with a null in any argument gives null, and `fn` is not called
   (numeric columns reach pandas as floats, so a NaN counts as null);
@@ -17,13 +19,22 @@ stays pandas/Arrow rather than plain or Arrow-optimised row UDFs,
 whose coercions differ: BinaryType, for one, arrives as `bytearray`
 there. A struct return type is sent back as a frame, so a null result
 there is a struct of nulls.
+
+`flat_map` maps one row to any number of rows (`mapInPandas`): `fn`
+gets every column of the row, as `row_udf` does, and returns an
+iterable of tuples in the output schema's field order; a generator, a
+one-tuple list and an empty result are all fine. There is no null
+guard (`fn` sees `None` and NaN as they arrive) and no error policy:
+any exception fails the Spark task. The output frame takes its field
+names from the schema, so a batch that yields nothing is still typed.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from typing import Any, Callable, Iterable
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DataType, StructType, _parse_datatype_string
 
@@ -63,3 +74,24 @@ def row_udf(
         )
 
     return pandas_udf(run, return_type)
+
+
+def flat_map(
+    df: DataFrame,
+    schema: str | StructType,
+    fn: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """`df.mapInPandas` calling `fn(*row)` once per input row; see the
+    module doc for the contract."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    fields = schema.fieldNames()
+
+    def run(batches):
+        for pdf in batches:
+            rows = pdf.itertuples(index=False, name=None)
+            yield pd.DataFrame.from_records(
+                [out for row in rows for out in fn(*row)], columns=fields
+            )
+
+    return df.mapInPandas(run, schema)

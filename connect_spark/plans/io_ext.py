@@ -608,9 +608,9 @@ def _i_nats(spark: SparkSession, c: dict) -> DataFrame:
     from connect_spark.sources.mq import MessageBus, nats_envelope
 
     if c.get("session_path"):
-        from connect_spark.plans.mq_ext import _nats_session_input
+        from connect_spark.plans.mq_ext import _nats_messages, _session_input
 
-        return _nats_session_input(spark, c)
+        return _session_input(spark, c, "*.nats", _nats_messages)
     bus = MessageBus(c["bus_path"])
     return nats_envelope(
         bus.subscribe(

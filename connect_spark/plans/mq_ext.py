@@ -29,6 +29,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from connect_spark.boundary import flat_map
 from connect_spark.plans.pipeline import (
     PipelineConfigError,
     input_kind,
@@ -227,181 +228,194 @@ def _envelope(df: DataFrame, c: dict, spec: MqKindSpec) -> DataFrame:
     return df.select(*cols)
 
 
-def _mqtt_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded MQTT 3.1.1 sessions (functions/mqtt_codec.py): decode
-    PUBLISH packets from `session_path` wire-byte files executor-side
-    into the documented mqtt metadata envelope."""
-    schema = "content STRING, _meta MAP<STRING, STRING>"
+# Recorded wire-format sessions: `session_path` files hold a kind's
+# real protocol bytes, decoded executor-side without a broker.  Each
+# decoder below turns one recorded blob into (content, meta) messages
+# in the kind's documented metadata envelope.
 
-    def decode(batches):
-        import pandas as _pd
+def _mqtt_messages(blob: bytes):
+    """MQTT 3.1.1 sessions (functions/mqtt_codec.py): PUBLISH packets."""
+    from connect_spark.functions.mqtt_codec import decode_session
 
-        from connect_spark.functions.mqtt_codec import decode_session
-
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for pkt in decode_session(bytes(blob)):
-                    if pkt.type_name != "publish":
-                        continue
-                    contents.append(
-                        pkt.payload.decode("utf-8", "replace"))
-                    metas.append({
-                        "mqtt_topic": pkt.topic,
-                        "mqtt_message_id": str(pkt.packet_id or 0),
-                        "mqtt_duplicate": str(pkt.dup).lower(),
-                        "mqtt_retained": str(pkt.retain).lower(),
-                        "mqtt_qos": str(pkt.qos),
-                    })
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", c.get("glob", "*.mqtt"))
-        .load(c["session_path"])
-        .select("content")
-        .mapInPandas(decode, schema)
-    )
+    for pkt in decode_session(blob):
+        if pkt.type_name != "publish":
+            continue
+        yield pkt.payload.decode("utf-8", "replace"), {
+            "mqtt_topic": pkt.topic,
+            "mqtt_message_id": str(pkt.packet_id or 0),
+            "mqtt_duplicate": str(pkt.dup).lower(),
+            "mqtt_retained": str(pkt.retain).lower(),
+            "mqtt_qos": str(pkt.qos),
+        }
 
 
-def _nats_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded NATS text-protocol streams: MSG frames decode to the
-    documented nats metadata envelope."""
-    schema = "content STRING, _meta MAP<STRING, STRING>"
+def _nats_messages(blob: bytes):
+    """NATS text-protocol streams: MSG frames."""
+    from connect_spark.functions.mqtt_codec import decode_nats_stream
 
-    def decode(batches):
-        import pandas as _pd
+    for msg in decode_nats_stream(blob):
+        meta = {"nats_subject": msg["subject"]}
+        if msg.get("reply"):
+            meta["nats_reply_subject"] = msg["reply"]
+        yield msg["payload"].decode("utf-8", "replace"), meta
 
-        from connect_spark.functions.mqtt_codec import (
-            decode_nats_stream,
+
+def _amqp_messages(blob: bytes):
+    """AMQP 0-9-1 sessions (functions/amqp_codec.py): basic.deliver +
+    content frames reassembled."""
+    from connect_spark.functions.amqp_codec import decode_session
+
+    for d in decode_session(blob):
+        meta = {
+            "amqp_routing_key": d.routing_key,
+            "amqp_delivery_tag": str(d.delivery_tag),
+            "amqp_consumer_tag": d.consumer_tag,
+            "amqp_exchange": d.exchange,
+            "amqp_redelivered": str(d.redelivered).lower(),
+        }
+        if d.content_type:
+            meta["amqp_content_type"] = d.content_type
+        if d.timestamp is not None:
+            meta["amqp_timestamp"] = str(d.timestamp)
+        for hk, hv in (d.headers or {}).items():
+            meta[f"amqp_header_{hk}"] = str(hv)
+        yield d.body.decode("utf-8", "replace"), meta
+
+
+def _redis_pubsub_messages(blob: bytes):
+    """RESP pub/sub sessions (functions/resp_codec.py): message and
+    pmessage pushes."""
+    from connect_spark.functions.resp_codec import pubsub_messages
+
+    for m in pubsub_messages(blob):
+        payload = m["payload"]
+        yield (
+            payload.decode("utf-8", "replace")
+            if isinstance(payload, bytes) else str(payload),
+            {
+                "redis_pubsub_channel": m["channel"],
+                "redis_pubsub_pattern": m["pattern"] or "",
+            },
         )
 
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for msg in decode_nats_stream(bytes(blob)):
-                    contents.append(
-                        msg["payload"].decode("utf-8", "replace"))
-                    meta = {"nats_subject": msg["subject"]}
-                    if msg.get("reply"):
-                        meta["nats_reply_subject"] = msg["reply"]
-                    metas.append(meta)
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
 
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", c.get("glob", "*.nats"))
-        .load(c["session_path"])
-        .select("content")
-        .mapInPandas(decode, schema)
+def _redis_streams_messages(blob: bytes, body_key: str):
+    """Recorded XREAD replies: stream entries with the adoc's
+    body_key/metadata split."""
+    from connect_spark.functions.resp_codec import xread_entries
+
+    for e in xread_entries(blob):
+        fields = dict(e["fields"])
+        content = fields.pop(body_key, None)
+        fields["redis_stream"] = e["stream"]
+        fields["redis_stream_id"] = e["id"]
+        yield content, fields
+
+
+def _nsq_messages(blob: bytes):
+    """nsqd→client V2 streams (functions/broker_codecs.py): message
+    frames (inputs/nsq.adoc: nsq_id / nsq_attempts / nsq_timestamp)."""
+    from connect_spark.functions.broker_codecs import decode_nsq_stream
+
+    for m in decode_nsq_stream(blob):
+        yield m["body"].decode("utf-8", "replace"), {
+            "nsq_id": m["message_id"],
+            "nsq_attempts": str(m["attempts"]),
+            "nsq_timestamp": str(m["timestamp_ns"]),
+        }
+
+
+def _beanstalkd_messages(blob: bytes):
+    """beanstalkd reserve sessions: RESERVED jobs (inputs/
+    beanstalkd.adoc documents no metadata; the job id is carried for
+    completeness)."""
+    from connect_spark.functions.broker_codecs import (
+        decode_beanstalkd_stream,
     )
 
+    for j in decode_beanstalkd_stream(blob):
+        yield (j["body"].decode("utf-8", "replace"),
+               {"beanstalkd_job_id": str(j["job_id"])})
 
-def _amqp_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded AMQP 0-9-1 sessions (functions/amqp_codec.py):
-    basic.deliver + content frames reassemble executor-side into the
-    documented amqp_0_9 metadata envelope."""
-    schema = "content STRING, _meta MAP<STRING, STRING>"
 
-    def decode(batches):
-        import pandas as _pd
+def _zmq_messages(blob: bytes):
+    """ZMTP 3.x streams (zmq4 input): multipart messages, the leading
+    part the SUB topic when present (inputs/zmq4.adoc documents no
+    metadata)."""
+    from connect_spark.functions.broker_codecs import decode_zmtp_stream
 
-        from connect_spark.functions.amqp_codec import decode_session
+    for parts in decode_zmtp_stream(blob):
+        meta = {"zmq_parts": str(len(parts))}
+        if len(parts) > 1:
+            meta["zmq_topic"] = parts[0].decode("utf-8", "replace")
+        yield parts[-1].decode("utf-8", "replace"), meta
 
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for d in decode_session(bytes(blob)):
-                    contents.append(
-                        d.body.decode("utf-8", "replace"))
-                    meta = {
-                        "amqp_routing_key": d.routing_key,
-                        "amqp_delivery_tag": str(d.delivery_tag),
-                        "amqp_consumer_tag": d.consumer_tag,
-                        "amqp_exchange": d.exchange,
-                        "amqp_redelivered": str(d.redelivered).lower(),
-                    }
-                    if d.content_type:
-                        meta["amqp_content_type"] = d.content_type
-                    if d.timestamp is not None:
-                        meta["amqp_timestamp"] = str(d.timestamp)
-                    for hk, hv in (d.headers or {}).items():
-                        meta[f"amqp_header_{hk}"] = str(hv)
-                    metas.append(meta)
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
 
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", c.get("glob", "*.amqp"))
-        .load(c["session_path"])
-        .select("content")
-        .mapInPandas(decode, schema)
+def _nanomsg_messages(blob: bytes):
+    """nanomsg SP-over-TCP streams (inputs/nanomsg.adoc documents no
+    metadata)."""
+    from connect_spark.functions.broker_codecs import decode_sp_stream
+
+    for payload in decode_sp_stream(blob):
+        yield payload.decode("utf-8", "replace"), {}
+
+
+def _pulsar_messages(blob: bytes):
+    """Pulsar binary-protocol sessions (functions/pulsar_codec.py):
+    MESSAGE frames (inputs/pulsar.adoc: pulsar_message_id /
+    pulsar_publish_time_unix / pulsar_key / pulsar_producer_name) plus
+    message properties."""
+    from connect_spark.functions.pulsar_codec import decode_stream
+
+    for m in decode_stream(blob):
+        meta = dict(m["properties"])
+        meta.update({
+            "pulsar_message_id": f"{m['ledger_id']}:{m['entry_id']}",
+            "pulsar_publish_time_unix": str(m["publish_time_ms"] // 1000),
+            "pulsar_producer_name": m["producer_name"],
+            "pulsar_redelivery_count": "0",
+        })
+        if m["partition_key"]:
+            meta["pulsar_key"] = m["partition_key"]
+        yield m["payload"].decode("utf-8", "replace"), meta
+
+
+def _amqp1_messages(blob: bytes):
+    """AMQP 1.0 sessions (functions/amqp1_codec.py): transfer frames
+    reassembled into bare messages; application properties merge into
+    the metadata like the reference's amqp_1 input, plus the documented
+    amqp_content_type / amqp_creation_time keys when present."""
+    from connect_spark.functions.amqp1_codec import (
+        Timestamp,
+        decode_session,
     )
 
+    for m in decode_session(blob):
+        body = m.data if m.data else (
+            str(m.value).encode() if m.value is not None else b"")
+        meta = {str(k): str(v) for k, v in m.application_properties.items()}
+        if m.subject is not None:
+            meta["amqp_subject"] = str(m.subject)
+        if m.content_type is not None:
+            meta["amqp_content_type"] = str(m.content_type)
+        props = m.properties
+        if len(props) > 9 and isinstance(props[9], Timestamp):
+            meta["amqp_creation_time"] = str(props[9].millis)
+        meta["amqp_delivery_id"] = str(m.delivery_id)
+        yield body.decode("utf-8", "replace"), meta
 
-def _redis_pubsub_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded RESP pub/sub sessions (functions/resp_codec.py):
-    message/pmessage pushes decode executor-side into the documented
-    redis_pubsub metadata envelope."""
-    schema = "content STRING, _meta MAP<STRING, STRING>"
 
-    def decode(batches):
-        import pandas as _pd
-
-        from connect_spark.functions.resp_codec import pubsub_messages
-
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for m in pubsub_messages(bytes(blob)):
-                    contents.append(
-                        m["payload"].decode("utf-8", "replace")
-                        if isinstance(m["payload"], bytes)
-                        else str(m["payload"]))
-                    metas.append({
-                        "redis_pubsub_channel": m["channel"],
-                        "redis_pubsub_pattern": m["pattern"] or "",
-                    })
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", c.get("glob", "*.resp"))
-        .load(c["session_path"])
-        .select("content")
-        .mapInPandas(decode, schema)
+def _websocket_messages(blob: bytes):
+    """RFC 6455 wire bytes (functions/websocket_codec.py): handshake
+    skip, masked payloads, fragment reassembly."""
+    from connect_spark.functions.websocket_codec import (
+        OP_TEXT,
+        decode_session,
     )
 
-
-def _redis_streams_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded XREAD replies → stream entries with the adoc's
-    body_key/metadata-split contract."""
-    schema = "content STRING, _meta MAP<STRING, STRING>"
-    body_key = c.get("body_key", "body")
-
-    def decode(batches):
-        import pandas as _pd
-
-        from connect_spark.functions.resp_codec import xread_entries
-
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for e in xread_entries(bytes(blob)):
-                    fields = dict(e["fields"])
-                    contents.append(fields.pop(body_key, None))
-                    fields["redis_stream"] = e["stream"]
-                    fields["redis_stream_id"] = e["id"]
-                    metas.append(fields)
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", c.get("glob", "*.resp"))
-        .load(c["session_path"])
-        .select("content")
-        .mapInPandas(decode, schema)
-    )
+    for m in decode_session(blob):
+        yield m.payload.decode("utf-8", "replace"), {
+            "websocket_opcode": "text" if m.opcode == OP_TEXT else "binary"}
 
 
 def _sessions_df(spark: SparkSession, c: dict, default_glob: str):
@@ -416,203 +430,25 @@ def _sessions_df(spark: SparkSession, c: dict, default_glob: str):
 _SESSION_SCHEMA = "content STRING, _meta MAP<STRING, STRING>"
 
 
-def _nsq_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded nsqd→client V2 streams (functions/broker_codecs.py):
-    message frames decode to the documented nsq metadata envelope
-    (inputs/nsq.adoc: nsq_id / nsq_attempts / nsq_timestamp)."""
-
-    def decode(batches):
-        import pandas as _pd
-
-        from connect_spark.functions.broker_codecs import (
-            decode_nsq_stream,
-        )
-
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for m in decode_nsq_stream(bytes(blob)):
-                    contents.append(
-                        m["body"].decode("utf-8", "replace"))
-                    metas.append({
-                        "nsq_id": m["message_id"],
-                        "nsq_attempts": str(m["attempts"]),
-                        "nsq_timestamp": str(m["timestamp_ns"]),
-                    })
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
-
-    return _sessions_df(spark, c, "*.nsq").mapInPandas(
-        decode, _SESSION_SCHEMA)
+def _session_input(spark: SparkSession, c: dict, default_glob: str,
+                   messages) -> DataFrame:
+    """One message row per (content, meta) that `messages(blob)` yields
+    from each recorded file under `session_path`."""
+    return flat_map(_sessions_df(spark, c, default_glob), _SESSION_SCHEMA,
+                    lambda blob: messages(bytes(blob)))
 
 
-def _beanstalkd_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded beanstalkd reserve sessions: RESERVED jobs decode to
-    rows (inputs/beanstalkd.adoc documents no metadata; the job id is
-    carried for completeness)."""
-
-    def decode(batches):
-        import pandas as _pd
-
-        from connect_spark.functions.broker_codecs import (
-            decode_beanstalkd_stream,
-        )
-
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for j in decode_beanstalkd_stream(bytes(blob)):
-                    contents.append(
-                        j["body"].decode("utf-8", "replace"))
-                    metas.append({
-                        "beanstalkd_job_id": str(j["job_id"])})
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
-
-    return _sessions_df(spark, c, "*.beanstalkd").mapInPandas(
-        decode, _SESSION_SCHEMA)
-
-
-def _zmq_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded ZMTP 3.x streams (zmq4 input): multipart messages
-    decode with the leading part as the SUB topic when present
-    (inputs/zmq4.adoc documents no metadata)."""
-
-    def decode(batches):
-        import pandas as _pd
-
-        from connect_spark.functions.broker_codecs import (
-            decode_zmtp_stream,
-        )
-
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for parts in decode_zmtp_stream(bytes(blob)):
-                    payload = parts[-1]
-                    meta = {"zmq_parts": str(len(parts))}
-                    if len(parts) > 1:
-                        meta["zmq_topic"] = parts[0].decode(
-                            "utf-8", "replace")
-                    contents.append(
-                        payload.decode("utf-8", "replace"))
-                    metas.append(meta)
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
-
-    return _sessions_df(spark, c, "*.zmtp").mapInPandas(
-        decode, _SESSION_SCHEMA)
-
-
-def _nanomsg_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded nanomsg SP-over-TCP streams (inputs/nanomsg.adoc
-    documents no metadata)."""
-
-    def decode(batches):
-        import pandas as _pd
-
-        from connect_spark.functions.broker_codecs import (
-            decode_sp_stream,
-        )
-
-        for pdf in batches:
-            contents = []
-            for blob in pdf["content"]:
-                for payload in decode_sp_stream(bytes(blob)):
-                    contents.append(
-                        payload.decode("utf-8", "replace"))
-            yield _pd.DataFrame({
-                "content": contents,
-                "_meta": [{} for _ in contents]})
-
-    return _sessions_df(spark, c, "*.sp").mapInPandas(
-        decode, _SESSION_SCHEMA)
-
-
-def _pulsar_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded Pulsar binary-protocol sessions
-    (functions/pulsar_codec.py): MESSAGE frames decode to the
-    documented pulsar metadata envelope (inputs/pulsar.adoc:
-    pulsar_message_id / pulsar_publish_time_unix / pulsar_key /
-    pulsar_producer_name) plus message properties."""
-
-    def decode(batches):
-        import pandas as _pd
-
-        from connect_spark.functions.pulsar_codec import decode_stream
-
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for m in decode_stream(bytes(blob)):
-                    contents.append(
-                        m["payload"].decode("utf-8", "replace"))
-                    meta = dict(m["properties"])
-                    meta.update({
-                        "pulsar_message_id":
-                            f"{m['ledger_id']}:{m['entry_id']}",
-                        "pulsar_publish_time_unix":
-                            str(m["publish_time_ms"] // 1000),
-                        "pulsar_producer_name": m["producer_name"],
-                        "pulsar_redelivery_count": "0",
-                    })
-                    if m["partition_key"]:
-                        meta["pulsar_key"] = m["partition_key"]
-                    metas.append(meta)
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
-
-    return _sessions_df(spark, c, "*.pulsar").mapInPandas(
-        decode, _SESSION_SCHEMA)
-
-
-def _amqp1_session_input(spark: SparkSession, c: dict) -> DataFrame:
-    """Recorded AMQP 1.0 sessions (functions/amqp1_codec.py):
-    transfer frames reassemble into bare messages; application
-    properties merge into the metadata map like the reference's
-    amqp_1 input, plus the documented amqp_content_type /
-    amqp_creation_time keys when present."""
-
-    def decode(batches):
-        import pandas as _pd
-
-        from connect_spark.functions.amqp1_codec import (
-            Timestamp,
-            decode_session,
-        )
-
-        for pdf in batches:
-            contents, metas = [], []
-            for blob in pdf["content"]:
-                for m in decode_session(bytes(blob)):
-                    body = m.data if m.data else (
-                        str(m.value).encode() if m.value is not None
-                        else b"")
-                    contents.append(body.decode("utf-8", "replace"))
-                    meta = {
-                        str(k): str(v)
-                        for k, v in m.application_properties.items()
-                    }
-                    if m.subject is not None:
-                        meta["amqp_subject"] = str(m.subject)
-                    if m.content_type is not None:
-                        meta["amqp_content_type"] = str(m.content_type)
-                    props = m.properties
-                    if len(props) > 9 and isinstance(
-                            props[9], Timestamp):
-                        meta["amqp_creation_time"] = str(
-                            props[9].millis)
-                    meta["amqp_delivery_id"] = str(m.delivery_id)
-                    metas.append(meta)
-            yield _pd.DataFrame({"content": contents, "_meta": metas})
-
-    return _sessions_df(spark, c, "*.amqp1").mapInPandas(
-        decode, _SESSION_SCHEMA)
-
-
+# kind -> (default session file glob, per-blob decoder)
 _SESSION_INPUTS = {
-    "nsq": _nsq_session_input,
-    "beanstalkd": _beanstalkd_session_input,
-    "zmq4": _zmq_session_input,
-    "nanomsg": _nanomsg_session_input,
-    "pulsar": _pulsar_session_input,
-    "amqp_1": _amqp1_session_input,
+    "mqtt": ("*.mqtt", _mqtt_messages),
+    "amqp_0_9": ("*.amqp", _amqp_messages),
+    "redis_pubsub": ("*.resp", _redis_pubsub_messages),
+    "nsq": ("*.nsq", _nsq_messages),
+    "beanstalkd": ("*.beanstalkd", _beanstalkd_messages),
+    "zmq4": ("*.zmtp", _zmq_messages),
+    "nanomsg": ("*.sp", _nanomsg_messages),
+    "pulsar": ("*.pulsar", _pulsar_messages),
+    "amqp_1": ("*.amqp1", _amqp1_messages),
 }
 
 
@@ -621,16 +457,8 @@ def _mq_input(kind: str, spec: MqKindSpec):
         # recorded wire-format sessions (round 5): the kind's REAL
         # protocol bytes, decoded without a broker
         if c.get("session_path"):
-            if kind == "mqtt":
-                return _mqtt_session_input(spark, c)
-            if kind == "nats":
-                return _nats_session_input(spark, c)
-            if kind == "amqp_0_9":
-                return _amqp_session_input(spark, c)
-            if kind == "redis_pubsub":
-                return _redis_pubsub_session_input(spark, c)
             if kind in _SESSION_INPUTS:
-                return _SESSION_INPUTS[kind](spark, c)
+                return _session_input(spark, c, *_SESSION_INPUTS[kind])
             raise PipelineConfigError(
                 f"{kind}: session_path recordings are supported for "
                 "amqp_0_9, amqp_1, mqtt, nats, redis_pubsub, "
@@ -669,7 +497,10 @@ def _i_redis_streams(spark: SparkSession, c: dict) -> DataFrame:
     from connect_spark.sources.mq import MessageBus
 
     if c.get("session_path"):
-        return _redis_streams_session_input(spark, c)
+        body_key = c.get("body_key", "body")
+        return _session_input(
+            spark, c, "*.resp",
+            lambda blob: _redis_streams_messages(blob, body_key))
     bus = MessageBus(c.get("bus_path") or c["path"])
     streams = c.get("streams", [])
     subject = None
@@ -910,30 +741,7 @@ def _i_websocket(spark: SparkSession, c: dict) -> DataFrame:
     instead (functions/websocket_codec.py — handshake skip, masked
     payloads, fragment reassembly)."""
     if c.get("session_path"):
-
-        def decode(batches):
-            import pandas as _pd
-
-            from connect_spark.functions.websocket_codec import (
-                OP_TEXT,
-                decode_session,
-            )
-
-            for pdf in batches:
-                contents, metas = [], []
-                for blob in pdf["content"]:
-                    for m in decode_session(bytes(blob)):
-                        contents.append(
-                            m.payload.decode("utf-8", "replace"))
-                        metas.append({
-                            "websocket_opcode":
-                                "text" if m.opcode == OP_TEXT
-                                else "binary"})
-                yield _pd.DataFrame(
-                    {"content": contents, "_meta": metas})
-
-        return _sessions_df(spark, c, "*.ws").mapInPandas(
-            decode, _SESSION_SCHEMA)
+        return _session_input(spark, c, "*.ws", _websocket_messages)
 
     from connect_spark.plans.processors_ext import _HTTP_TRANSPORTS
 

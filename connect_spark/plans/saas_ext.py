@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from connect_spark.boundary import flat_map
 from connect_spark.plans.pipeline import (
     PipelineConfigError,
     input_kind,
@@ -221,25 +222,15 @@ def _i_git(spark: SparkSession, c: dict) -> DataFrame:
         T.StructField("git_commit", T.StringType()),
     ])
 
-    def read_files(batches):
-        import pandas as _pd
+    def read_file(rel):
+        try:
+            with open(os.path.join(base, rel), "rb") as fh:
+                content = fh.read(max_bytes)
+        except OSError:
+            content = None
+        return [(rel, content, head)]
 
-        for pdf in batches:
-            contents = []
-            for rel in pdf["git_file_path"].tolist():
-                p = os.path.join(base, rel)
-                try:
-                    with open(p, "rb") as fh:
-                        contents.append(fh.read(max_bytes))
-                except OSError:
-                    contents.append(None)
-            yield _pd.DataFrame({
-                "git_file_path": pdf["git_file_path"],
-                "content": contents,
-                "git_commit": [head] * len(contents),
-            })
-
-    return src.mapInPandas(read_files, schema)
+    return flat_map(src, schema, read_file)
 
 
 # --------------------------------------------------------------------
@@ -284,35 +275,26 @@ def _i_otlp_http(spark: SparkSession, c: dict) -> DataFrame:
     df = http_server_input(spark, c)
     schema = T.StructType([T.StructField("content", T.StringType())])
 
-    def _flatten_doc(doc: dict, out: list) -> None:
-        for rs in doc.get("resourceSpans", []):
-            for ss in (rs or {}).get("scopeSpans", []) or []:
-                for span in (ss or {}).get("spans", []) or []:
-                    out.append(json.dumps(span, sort_keys=True))
-
-    def flatten(batches):
+    def flatten(doc_s):
         import base64 as _b64
-
-        import pandas as _pd
 
         from connect_spark.functions.otlp_proto import (
             decode_traces_request,
         )
 
-        for pdf in batches:
-            out: list = []
-            for doc_s in pdf["content"].tolist():
-                try:
-                    doc = json.loads(doc_s)
-                except (TypeError, ValueError):
-                    continue
-                if isinstance(doc, dict) and "__binary_b64__" in doc:
-                    doc = decode_traces_request(
-                        _b64.b64decode(doc["__binary_b64__"]))
-                _flatten_doc(doc, out)
-            yield _pd.DataFrame({"content": out})
+        try:
+            doc = json.loads(doc_s)
+        except (TypeError, ValueError):
+            return
+        if isinstance(doc, dict) and "__binary_b64__" in doc:
+            doc = decode_traces_request(
+                _b64.b64decode(doc["__binary_b64__"]))
+        for rs in doc.get("resourceSpans", []):
+            for ss in (rs or {}).get("scopeSpans", []) or []:
+                for span in (ss or {}).get("spans", []) or []:
+                    yield (json.dumps(span, sort_keys=True),)
 
-    return df.mapInPandas(flatten, schema)
+    return flat_map(df.select("content"), schema, flatten)
 
 
 def _otlp_grpc_gate(*_a, **_k):
@@ -842,8 +824,6 @@ def _p_openai_image(df: DataFrame, conf: dict) -> DataFrame:
     schema = T.StructType(fields)
 
     def run(batches):
-        import pandas as _pd
-
         for pdf in batches:
             pdf = pdf.copy()
             pdf[out] = [

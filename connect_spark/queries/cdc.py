@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from connect_spark.boundary import flat_map
 from connect_spark.catalog import load_table
 from connect_spark.queries import QuerySpec
 
@@ -338,8 +339,6 @@ def cdc_logminer_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-writer-wins on SCN.  The oracle reproduces the change
     semantics in SQL, so a parser bug (quote escapes, NULLs, aliases,
     WHERE extraction) breaks the value hash."""
-    import json as _json
-
     sup = load_table(spark, sf_dir, "supplier")
     k = F.col("s_suppkey")
     esc = lambda c: F.regexp_replace(c, "'", "''")  # noqa: E731
@@ -372,29 +371,20 @@ def cdc_logminer_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     log = ins.unionByName(upd).unionByName(dele)
 
-    def parse(batches):
-        import pandas as _pd
-
+    def parse(scn, sql):
         from connect_spark.sources.sqlredo import parse_redo
 
-        for pdf in batches:
-            out = {"scn": [], "operation": [], "sup_id": [],
-                   "name": [], "bal": []}
-            for scn, sql in zip(pdf["scn"], pdf["sql_redo"]):
-                st = parse_redo(sql)
-                img = st.new_values or {}
-                key = img.get("ID") or st.old_values.get("ID")
-                out["scn"].append(int(scn))
-                out["operation"].append(st.operation)
-                out["sup_id"].append(int(key))
-                out["name"].append(img.get("NAME"))
-                out["bal"].append(img.get("BAL"))
-            yield _pd.DataFrame(out)
+        st = parse_redo(sql)
+        img = st.new_values or {}
+        key = img.get("ID") or st.old_values.get("ID")
+        return [(int(scn), st.operation, int(key), img.get("NAME"),
+                 img.get("BAL"))]
 
-    parsed = log.mapInPandas(
-        parse,
+    parsed = flat_map(
+        log,
         "scn LONG, operation STRING, sup_id LONG, name STRING, "
         "bal STRING",
+        parse,
     )
     w_ = Window.partitionBy("sup_id").orderBy(F.col("scn").desc())
     return (

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from connect_spark.boundary import flat_map
 from connect_spark.catalog import fanout_scan, load_table
 from connect_spark.queries import QuerySpec
 
@@ -176,25 +177,16 @@ def kafka_recordbatch_roundtrip(spark: SparkSession,
                                          codec=CODEC_LZ4)],
             })
 
-    def decode(batches):
-        import pandas as _pd
-
+    def decode(blob):
         from connect_spark.functions.kafka_records import decode_segment
 
-        for pdf in batches:
-            out = {"event_id": [], "kf_type": [], "kf_value": []}
-            for blob in pdf["segment"]:
-                for rec in decode_segment(bytes(blob)):
-                    doc = _json.loads(rec.value)
-                    out["event_id"].append(int(rec.key))
-                    out["kf_type"].append(doc["event_type"])
-                    out["kf_value"].append(doc["value"])
-            yield _pd.DataFrame(out)
+        for rec in decode_segment(bytes(blob)):
+            doc = _json.loads(rec.value)
+            yield int(rec.key), doc["event_type"], doc["value"]
 
     segments = ev.mapInPandas(encode, "segment BINARY")
-    return segments.mapInPandas(
-        decode, "event_id LONG, kf_type STRING, kf_value DOUBLE"
-    )
+    return flat_map(segments,
+                    "event_id LONG, kf_type STRING, kf_value DOUBLE", decode)
 
 
 KAFKA_RB_SQL = """
@@ -252,29 +244,20 @@ def amqp1_envelope_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                     max_frame_payload=96)
             yield _pd.DataFrame({"session": [bytes(buf)]})
 
-    def decode(batches):
-        import pandas as _pd
-
+    def decode(blob):
         from connect_spark.functions.amqp1_codec import decode_session
 
-        for pdf in batches:
-            out = {"event_id": [], "subject": [], "a1_type": [],
-                   "a1_value_x100": []}
-            for blob in pdf["session"]:
-                for m in decode_session(bytes(blob)):
-                    doc = _json.loads(m.data)
-                    out["event_id"].append(m.delivery_id)
-                    out["subject"].append(m.subject)
-                    out["a1_type"].append(doc["event_type"])
-                    out["a1_value_x100"].append(
-                        m.application_properties["value_x100"])
-            yield _pd.DataFrame(out)
+        for m in decode_session(bytes(blob)):
+            doc = _json.loads(m.data)
+            yield (m.delivery_id, m.subject, doc["event_type"],
+                   m.application_properties["value_x100"])
 
     sessions = ev.mapInPandas(encode, "session BINARY")
-    return sessions.mapInPandas(
-        decode,
+    return flat_map(
+        sessions,
         "event_id LONG, subject STRING, a1_type STRING,"
         " a1_value_x100 LONG",
+        decode,
     )
 
 

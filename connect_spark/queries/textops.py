@@ -19,11 +19,13 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-import pandas as pd
+import hashlib
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from connect_spark.boundary import flat_map
 from connect_spark.catalog import load_table
 from connect_spark.queries import QuerySpec
 
@@ -686,30 +688,20 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, load_table(spark, sf_dir, "documents"), sf_dir,
         "documents")
 
-    def sig_batches(batches):
-        import hashlib
+    def sig(doc_id, text):
+        toks = {t for t in text.split(" ") if t}
+        if not toks:
+            return []
+        dig = np.frombuffer(
+            b"".join(hashlib.md5(t.encode("utf-8")).digest()[:8]
+                     for t in toks), dtype=np.uint8)
+        bits = np.unpackbits(dig).reshape(len(toks), 64)
+        ones = bits.sum(axis=0, dtype=np.int64)
+        keep = 2 * ones >= len(toks)
+        return [(doc_id, "".join("1" if k else "0" for k in keep))]
 
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = {t for t in text.split(" ") if t}
-                if not toks:
-                    continue
-                dig = np.frombuffer(
-                    b"".join(hashlib.md5(t.encode("utf-8")).digest()[:8]
-                             for t in toks), dtype=np.uint8)
-                bits = np.unpackbits(dig).reshape(len(toks), 64)
-                ones = bits.sum(axis=0, dtype=np.int64)
-                keep = 2 * ones >= len(toks)
-                ids.append(doc_id)
-                sigs.append("".join("1" if k else "0" for k in keep))
-            yield pd.DataFrame({"doc_id": ids, "simhash": sigs})
-
-    return docs.select("doc_id", "text").mapInPandas(
-        sig_batches, schema="doc_id long, simhash string")
+    return flat_map(docs.select("doc_id", "text"),
+                    "doc_id long, simhash string", sig)
 
 
 SIMHASH_SQL = """
@@ -1047,6 +1039,40 @@ FROM t
 
 # --- multimodal plumbing: opaque binary payload + typed metadata ---
 
+def _event_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The `events` ids, spread over all cores for the synthesis +
+    codec queries below."""
+    # the synthesis + codec chain is CPU-bound Python: spread it over
+    # all cores — the events scan is a single small split locally, and
+    # a narrow map inherits that (at 100 TB the scan has many splits
+    # and this repartition is a no-op-sized shuffle of one id column)
+    return (load_table(spark, sf_dir, "events").select("event_id")
+            .repartition(spark.sparkContext.defaultParallelism))
+
+
+def _synth_media(spark: SparkSession, sf_dir: str, mime: str,
+                 payload) -> DataFrame:
+    """The media envelope (text/multimodal.py) with one synthetic
+    `mime` row per event: media_id = event_id, payload =
+    `payload(event_id)`, the query's pixel/sample formula run through
+    its encoder."""
+    from connect_spark.text.multimodal import MEDIA_SCHEMA
+
+    return flat_map(_event_ids(spark, sf_dir), MEDIA_SCHEMA,
+                    lambda e: [(e, payload(e), mime, {})])
+
+
+def _pcm_samples(e: int) -> list[int]:
+    """The 64 PCM16 samples of event `e`'s synthetic audio:
+    s_i = ((e*7 + i*13) mod 256 - 128) * 128."""
+    return [((e * 7 + i * 13) % 256 - 128) * 128 for i in range(64)]
+
+
+# output of the lossless JPEG gates: the decoded plane's sum and
+# position-weighted checksum
+_PLANE_SUMS = "event_id BIGINT, sum_s BIGINT, pos_checksum BIGINT"
+
+
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal-column plumbing: treat the payload as an opaque BINARY
     column with typed metadata (byte length, content hash, magic-header
@@ -1083,39 +1109,12 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output reduces to exact integers the oracle recomputes from
     the same arithmetic — sample-rate/channel plumbing, RIFF chunk
     walk, and PCM16 decoding are all value-checked."""
+    from connect_spark.text.media_codecs import encode_wav
     from connect_spark.text.multimodal import decode_media
 
-    # the synthesis + codec chain is CPU-bound Python: spread it over
-    # all cores — the events scan is a single small split locally, and
-    # a narrow map inherits that (at 100 TB the scan has many splits
-    # and this repartition is a no-op-sized shuffle of one id column)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
-
-    def make_media(batches):
-        import pandas as _pd
-
-        from connect_spark.text.media_codecs import encode_wav
-
-        for pdf in batches:
-            payloads = [
-                encode_wav(
-                    [((int(e) * 7 + i * 13) % 256 - 128) * 128
-                     for i in range(64)],
-                    sample_rate=8000,
-                )
-                for e in pdf["event_id"]
-            ]
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["audio/wav"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    from connect_spark.text.multimodal import MEDIA_SCHEMA
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(
+        spark, sf_dir, "audio/wav",
+        lambda e: encode_wav(_pcm_samples(e), sample_rate=8000))
     out = decode_media(media, decode_stub=False)
     return out.select(
         F.col("media_id").alias("event_id"),
@@ -1192,38 +1191,16 @@ def multimodal_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetically: resized pixel (x, y) samples source (2x, 2y), so
     sum_rgb and the position-weighted checksum pin the exact resized
     raster, orientation included."""
-    from connect_spark.text.multimodal import (
-        MEDIA_SCHEMA, bmp_pixel_stats, resize_media)
+    from connect_spark.text.media_codecs import encode_bmp
+    from connect_spark.text.multimodal import bmp_pixel_stats, resize_media
 
-    # the synthesis + codec chain is CPU-bound Python: spread it over
-    # all cores — the events scan is a single small split locally, and
-    # a narrow map inherits that (at 100 TB the scan has many splits
-    # and this repartition is a no-op-sized shuffle of one id column)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    def payload(e: int) -> bytes:
+        return encode_bmp([[((e + 3 * x + 5 * y) % 256,
+                             (2 * e + 7 * x + y) % 256,
+                             (3 * e + x + 11 * y) % 256)
+                            for x in range(8)] for y in range(8)])
 
-    def make_media(batches):
-        import pandas as _pd
-
-        from connect_spark.text.media_codecs import encode_bmp
-
-        for pdf in batches:
-            payloads = []
-            for e in pdf["event_id"]:
-                e = int(e)
-                rows = [[((e + 3 * x + 5 * y) % 256,
-                          (2 * e + 7 * x + y) % 256,
-                          (3 * e + x + 11 * y) % 256)
-                         for x in range(8)] for y in range(8)]
-                payloads.append(encode_bmp(rows))
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["image/bmp"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(spark, sf_dir, "image/bmp", payload)
     return bmp_pixel_stats(resize_media(media, 4, 4)).select(
         F.col("media_id").alias("event_id"),
         "width", "height", "sum_rgb", "pos_checksum")
@@ -1258,38 +1235,16 @@ def multimodal_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     The same end-to-end shape as multimodal_bmp_resize, proving the
     raster plumbing on a COMPRESSED container with every defilter
     path live."""
-    from connect_spark.text.multimodal import (
-        MEDIA_SCHEMA, bmp_pixel_stats, resize_media)
+    from connect_spark.text.media_codecs import encode_png
+    from connect_spark.text.multimodal import bmp_pixel_stats, resize_media
 
-    # the synthesis + codec chain is CPU-bound Python: spread it over
-    # all cores — the events scan is a single small split locally, and
-    # a narrow map inherits that (at 100 TB the scan has many splits
-    # and this repartition is a no-op-sized shuffle of one id column)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    def payload(e: int) -> bytes:
+        return encode_png([[((e + 9 * x + 2 * y) % 256,
+                             (2 * e + 3 * x + 13 * y) % 256,
+                             (5 * e + 7 * x + y) % 256)
+                            for x in range(8)] for y in range(8)])
 
-    def make_media(batches):
-        import pandas as _pd
-
-        from connect_spark.text.media_codecs import encode_png
-
-        for pdf in batches:
-            payloads = []
-            for e in pdf["event_id"]:
-                e = int(e)
-                rows = [[((e + 9 * x + 2 * y) % 256,
-                          (2 * e + 3 * x + 13 * y) % 256,
-                          (5 * e + 7 * x + y) % 256)
-                         for x in range(8)] for y in range(8)]
-                payloads.append(encode_png(rows))
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["image/png"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(spark, sf_dir, "image/png", payload)
     return bmp_pixel_stats(resize_media(media, 4, 4)).select(
         F.col("media_id").alias("event_id"),
         "width", "height", "sum_rgb", "pos_checksum")
@@ -1327,38 +1282,16 @@ def multimodal_jpeg_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks roundtrip losslessly in YCbCr space, so the oracle can
     recompute every decoded pixel arithmetically: forward and inverse
     integer color transforms mirrored verbatim in SQL."""
-    from connect_spark.text.multimodal import (
-        MEDIA_SCHEMA, bmp_pixel_stats, resize_media)
+    from connect_spark.text.media_codecs import encode_jpeg
+    from connect_spark.text.multimodal import bmp_pixel_stats, resize_media
 
-    # the synthesis + codec chain is CPU-bound Python: spread it over
-    # all cores — the events scan is a single small split locally, and
-    # a narrow map inherits that (at 100 TB the scan has many splits
-    # and this repartition is a no-op-sized shuffle of one id column)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    def payload(e: int) -> bytes:
+        return encode_jpeg([[((e + 31 * (x // 8) + 57 * (y // 8)) % 256,
+                              (2 * e + 43 * (x // 8) + 17 * (y // 8)) % 256,
+                              (5 * e + 13 * (x // 8) + 71 * (y // 8)) % 256)
+                             for x in range(16)] for y in range(16)])
 
-    def make_media(batches):
-        import pandas as _pd
-
-        from connect_spark.text.media_codecs import encode_jpeg
-
-        for pdf in batches:
-            payloads = []
-            for e in pdf["event_id"]:
-                e = int(e)
-                rows = [[((e + 31 * (x // 8) + 57 * (y // 8)) % 256,
-                          (2 * e + 43 * (x // 8) + 17 * (y // 8)) % 256,
-                          (5 * e + 13 * (x // 8) + 71 * (y // 8)) % 256)
-                         for x in range(16)] for y in range(16)]
-                payloads.append(encode_jpeg(rows))
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["image/jpeg"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(spark, sf_dir, "image/jpeg", payload)
     return bmp_pixel_stats(resize_media(media, 2, 2)).select(
         F.col("media_id").alias("event_id"),
         "width", "height", "sum_rgb", "pos_checksum")
@@ -1413,37 +1346,17 @@ def multimodal_jpeg_progressive(spark: SparkSession,
     non-interleaved component-grid traversal, not just the baseline
     path.  Decode -> 2x2 resize -> position-weighted checksum, same
     lossless-constant-block arithmetic the oracle mirrors."""
-    from connect_spark.text.multimodal import (
-        MEDIA_SCHEMA, bmp_pixel_stats, resize_media)
+    from connect_spark.text.media_codecs import encode_jpeg_progressive
+    from connect_spark.text.multimodal import bmp_pixel_stats, resize_media
 
-    # the synthesis + codec chain is CPU-bound Python: spread it over
-    # all cores (see multimodal_jpeg_resize)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    def payload(e: int) -> bytes:
+        return encode_jpeg_progressive(
+            [[((3 * e + 23 * (x // 8) + 41 * (y // 8)) % 256,
+               (e + 61 * (x // 8) + 29 * (y // 8)) % 256,
+               (7 * e + 47 * (x // 8) + 11 * (y // 8)) % 256)
+              for x in range(16)] for y in range(16)])
 
-    def make_media(batches):
-        import pandas as _pd
-
-        from connect_spark.text.media_codecs import (
-            encode_jpeg_progressive)
-
-        for pdf in batches:
-            payloads = []
-            for e in pdf["event_id"]:
-                e = int(e)
-                rows = [[((3 * e + 23 * (x // 8) + 41 * (y // 8)) % 256,
-                          (e + 61 * (x // 8) + 29 * (y // 8)) % 256,
-                          (7 * e + 47 * (x // 8) + 11 * (y // 8)) % 256)
-                         for x in range(16)] for y in range(16)]
-                payloads.append(encode_jpeg_progressive(rows))
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["image/jpeg"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(spark, sf_dir, "image/jpeg", payload)
     return bmp_pixel_stats(resize_media(media, 2, 2)).select(
         F.col("media_id").alias("event_id"),
         "width", "height", "sum_rgb", "pos_checksum")
@@ -1493,38 +1406,18 @@ def multimodal_video_framesample(spark: SparkSession,
     position-weighted checksum.  Constant blocks + flat-8 quant make
     the decode arithmetic the oracle mirrors exactly; inter-frame
     codecs (H.264 etc.) stay behind the honest ffmpeg gate."""
-    from connect_spark.text.multimodal import MEDIA_SCHEMA, avi_frame_stats
+    from connect_spark.text.media_codecs import encode_avi_mjpeg
+    from connect_spark.text.multimodal import avi_frame_stats
 
-    # the synthesis + codec chain is CPU-bound Python: spread it over
-    # all cores — the events scan is a single small split locally, and
-    # a narrow map inherits that (at 100 TB the scan has many splits
-    # and this repartition is a no-op-sized shuffle of one id column)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    def payload(e: int) -> bytes:
+        frames = [
+            [[((e + 19 * f) % 256, (3 * e + 37 * f) % 256,
+               (7 * e + 53 * f) % 256)] * 8 for _ in range(8)]
+            for f in range(2)
+        ]
+        return encode_avi_mjpeg(frames, fps=5)
 
-    def make_media(batches):
-        import pandas as _pd
-
-        from connect_spark.text.media_codecs import encode_avi_mjpeg
-
-        for pdf in batches:
-            payloads = []
-            for e in pdf["event_id"]:
-                e = int(e)
-                frames = [
-                    [[((e + 19 * f) % 256, (3 * e + 37 * f) % 256,
-                       (7 * e + 53 * f) % 256)] * 8 for _ in range(8)]
-                    for f in range(2)
-                ]
-                payloads.append(encode_avi_mjpeg(frames, fps=5))
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["video/x-msvideo"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(spark, sf_dir, "video/x-msvideo", payload)
     return avi_frame_stats(media, 1).select(
         F.col("media_id").alias("event_id"),
         "n_frames", "width", "height", "sum_rgb", "pos_checksum")
@@ -1573,38 +1466,12 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero crossings — the one-to-many explode shape with every value
     recomputable by the oracle from the sample formula
     s_i = ((event_id*7 + i*13) mod 256 - 128) * 128."""
-    from connect_spark.text.multimodal import (
-        MEDIA_SCHEMA, wav_window_features)
+    from connect_spark.text.media_codecs import encode_wav
+    from connect_spark.text.multimodal import wav_window_features
 
-    # the synthesis + codec chain is CPU-bound Python: spread it over
-    # all cores — the events scan is a single small split locally, and
-    # a narrow map inherits that (at 100 TB the scan has many splits
-    # and this repartition is a no-op-sized shuffle of one id column)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
-
-    def make_media(batches):
-        import pandas as _pd
-
-        from connect_spark.text.media_codecs import encode_wav
-
-        for pdf in batches:
-            payloads = [
-                encode_wav(
-                    [((int(e) * 7 + i * 13) % 256 - 128) * 128
-                     for i in range(64)],
-                    sample_rate=8000,
-                )
-                for e in pdf["event_id"]
-            ]
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["audio/wav"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(
+        spark, sf_dir, "audio/wav",
+        lambda e: encode_wav(_pcm_samples(e), sample_rate=8000))
     return wav_window_features(media, window=16).select(
         F.col("media_id").alias("event_id"),
         "win_idx", "n_samples", "energy", "zero_crossings")
@@ -1621,39 +1488,20 @@ def multimodal_gif_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame" op against a genuinely decoded format), expands the
     palette, and reduces to the position-weighted checksum the oracle
     recomputes arithmetically."""
-    from connect_spark.text.multimodal import MEDIA_SCHEMA, gif_frame_stats
+    from connect_spark.text.media_codecs import encode_gif
+    from connect_spark.text.multimodal import gif_frame_stats
 
-    # the synthesis + codec chain is CPU-bound Python: spread it over
-    # all cores — the events scan is a single small split locally, and
-    # a narrow map inherits that (at 100 TB the scan has many splits
-    # and this repartition is a no-op-sized shuffle of one id column)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    pal = [(i, (3 * i) % 256, (7 * i) % 256) for i in range(256)]
 
-    def make_media(batches):
-        import pandas as _pd
+    def payload(e: int) -> bytes:
+        frames = [
+            [[(e + 17 * x + 29 * y + 53 * f) % 256
+              for x in range(8)] for y in range(8)]
+            for f in range(2)
+        ]
+        return encode_gif(frames, pal, delay_cs=4)
 
-        from connect_spark.text.media_codecs import encode_gif
-
-        pal = [(i, (3 * i) % 256, (7 * i) % 256) for i in range(256)]
-        for pdf in batches:
-            payloads = []
-            for e in pdf["event_id"]:
-                e = int(e)
-                frames = [
-                    [[(e + 17 * x + 29 * y + 53 * f) % 256
-                      for x in range(8)] for y in range(8)]
-                    for f in range(2)
-                ]
-                payloads.append(encode_gif(frames, pal, delay_cs=4))
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["image/gif"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(spark, sf_dir, "image/gif", payload)
     return gif_frame_stats(media, frame_idx=1).select(
         F.col("media_id").alias("event_id"),
         "n_frames", "width", "height", "sum_rgb", "pos_checksum")
@@ -1687,38 +1535,12 @@ def multimodal_mulaw_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     expand(compress(s)), the canonical G.711 reconstruction levels,
     which the oracle rebuilds with exact integer segment/mantissa
     arithmetic."""
-    from connect_spark.text.multimodal import (
-        MEDIA_SCHEMA, wav_window_features)
+    from connect_spark.text.media_codecs import encode_wav_mulaw
+    from connect_spark.text.multimodal import wav_window_features
 
-    # the synthesis + codec chain is CPU-bound Python: spread it over
-    # all cores — the events scan is a single small split locally, and
-    # a narrow map inherits that (at 100 TB the scan has many splits
-    # and this repartition is a no-op-sized shuffle of one id column)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
-
-    def make_media(batches):
-        import pandas as _pd
-
-        from connect_spark.text.media_codecs import encode_wav_mulaw
-
-        for pdf in batches:
-            payloads = [
-                encode_wav_mulaw(
-                    [((int(e) * 7 + i * 13) % 256 - 128) * 128
-                     for i in range(64)],
-                    sample_rate=8000,
-                )
-                for e in pdf["event_id"]
-            ]
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["audio/wav"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(
+        spark, sf_dir, "audio/wav",
+        lambda e: encode_wav_mulaw(_pcm_samples(e), sample_rate=8000))
     return wav_window_features(media, window=16).select(
         F.col("media_id").alias("event_id"),
         "win_idx", "n_samples", "energy", "zero_crossings")
@@ -1903,41 +1725,23 @@ def multimodal_jpeg_lossless(spark: SparkSession,
 
     Scale: zero-shuffle narrow mapInPandas after a repartition across
     cores (CPU-bound pure-Python codec, the multimodal seam shape)."""
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    from connect_spark.text.media_codecs import (
+        decode_jpeg_lossless, encode_jpeg_lossless,
+        encode_jpeg_lossless_arith)
 
-    def run(batches):
-        import pandas as _pd
+    def roundtrip(e):
+        plane = [[(7 * e + 131 * x + 239 * y) % 4096
+                  for x in range(8)] for y in range(6)]
+        encoder = (encode_jpeg_lossless if e % 2 == 0
+                   else encode_jpeg_lossless_arith)
+        enc = encoder([plane], precision=12, predictor=e % 7 + 1,
+                      restart_rows=e % 3)
+        out = decode_jpeg_lossless(enc)["planes"][0]
+        return [(e, sum(v for row in out for v in row),
+                 sum((x + 1) * (y + 3) * out[y][x]
+                     for y in range(6) for x in range(8)))]
 
-        from connect_spark.text.media_codecs import (
-            decode_jpeg_lossless, encode_jpeg_lossless,
-            encode_jpeg_lossless_arith)
-
-        for pdf in batches:
-            sums, checks = [], []
-            for e in pdf["event_id"]:
-                e = int(e)
-                plane = [[(7 * e + 131 * x + 239 * y) % 4096
-                          for x in range(8)] for y in range(6)]
-                encoder = (encode_jpeg_lossless if e % 2 == 0
-                           else encode_jpeg_lossless_arith)
-                enc = encoder(
-                    [plane], precision=12,
-                    predictor=e % 7 + 1,
-                    restart_rows=e % 3)
-                out = decode_jpeg_lossless(enc)["planes"][0]
-                sums.append(sum(v for row in out for v in row))
-                checks.append(sum((x + 1) * (y + 3) * out[y][x]
-                                  for y in range(6)
-                                  for x in range(8)))
-            yield _pd.DataFrame({
-                "event_id": pdf["event_id"],
-                "sum_s": _pd.Series(sums, dtype="int64"),
-                "pos_checksum": _pd.Series(checks, dtype="int64"),
-            })
-
-    schema = "event_id BIGINT, sum_s BIGINT, pos_checksum BIGINT"
-    return ev.mapInPandas(run, schema)
+    return flat_map(_event_ids(spark, sf_dir), _PLANE_SUMS, roundtrip)
 
 
 MULTIMODAL_JPEG_LOSSLESS_SQL = """
@@ -1976,47 +1780,29 @@ def multimodal_jpeg_hierarchical(spark: SparkSession,
     Scale: zero-shuffle narrow mapInPandas after a repartition
     across cores (CPU-bound pure-Python codec, the multimodal seam
     shape — linear in rows / cores like the other media gates)."""
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    from connect_spark.text.media_codecs import (
+        decode_jpeg_hierarchical, encode_jpeg_hierarchical,
+        encode_jpeg_hierarchical_dct)
 
-    def run(batches):
-        import pandas as _pd
+    def roundtrip(e):
+        plane = [[(11 * e + 37 * x + 101 * y) % 256
+                  for x in range(10)] for y in range(7)]
+        if e % 5 == 0:
+            # K.5 lossy pyramid: SOF0 base + SOF5 differential-DCT
+            # refinements (depth e mod 3 + 1) + exact SOF7/SOFF
+            # residual
+            enc = encode_jpeg_hierarchical_dct(
+                plane, arithmetic_residual=e % 2 == 1, levels=e % 3 + 1)
+        else:
+            enc = encode_jpeg_hierarchical(
+                [plane], levels=e % 3 + 1, predictor=e % 7 + 1,
+                arithmetic=e % 2 == 1)
+        out = decode_jpeg_hierarchical(enc)["planes"][0]
+        return [(e, sum(v for row in out for v in row),
+                 sum((x + 1) * (y + 3) * out[y][x]
+                     for y in range(7) for x in range(10)))]
 
-        from connect_spark.text.media_codecs import (
-            decode_jpeg_hierarchical, encode_jpeg_hierarchical,
-            encode_jpeg_hierarchical_dct)
-
-        for pdf in batches:
-            sums, checks = [], []
-            for e in pdf["event_id"]:
-                e = int(e)
-                plane = [[(11 * e + 37 * x + 101 * y) % 256
-                          for x in range(10)] for y in range(7)]
-                if e % 5 == 0:
-                    # K.5 lossy pyramid: SOF0 base + SOF5
-                    # differential-DCT refinements (depth e mod 3
-                    # + 1) + exact SOF7/SOFF residual
-                    enc = encode_jpeg_hierarchical_dct(
-                        plane, arithmetic_residual=e % 2 == 1,
-                        levels=e % 3 + 1)
-                else:
-                    enc = encode_jpeg_hierarchical(
-                        [plane], levels=e % 3 + 1,
-                        predictor=e % 7 + 1,
-                        arithmetic=e % 2 == 1)
-                out = decode_jpeg_hierarchical(enc)["planes"][0]
-                sums.append(sum(v for row in out for v in row))
-                checks.append(sum((x + 1) * (y + 3) * out[y][x]
-                                  for y in range(7)
-                                  for x in range(10)))
-            yield _pd.DataFrame({
-                "event_id": pdf["event_id"],
-                "sum_s": _pd.Series(sums, dtype="int64"),
-                "pos_checksum": _pd.Series(checks, dtype="int64"),
-            })
-
-    schema = "event_id BIGINT, sum_s BIGINT, pos_checksum BIGINT"
-    return ev.mapInPandas(run, schema)
+    return flat_map(_event_ids(spark, sf_dir), _PLANE_SUMS, roundtrip)
 
 
 MULTIMODAL_JPEG_HIERARCHICAL_SQL = """
@@ -2101,37 +1887,17 @@ def multimodal_jpeg_arith(spark: SparkSession,
     arithmetic exactly; the adaptive probability states, DAC
     conditioning, stuffing and flush path all sit between encode and
     the checked output."""
-    from connect_spark.text.multimodal import (
-        MEDIA_SCHEMA, bmp_pixel_stats, resize_media)
+    from connect_spark.text.media_codecs import encode_jpeg_arith
+    from connect_spark.text.multimodal import bmp_pixel_stats, resize_media
 
-    # CPU-bound Python synthesis + codec: spread over all cores (the
-    # local events scan is one split; at production split counts this
-    # repartition is a no-op-sized shuffle of one id column)
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    def payload(e: int) -> bytes:
+        return encode_jpeg_arith(
+            [[((5 * e + 31 * (x // 8) + 43 * (y // 8)) % 256,
+               (2 * e + 59 * (x // 8) + 17 * (y // 8)) % 256,
+               (11 * e + 53 * (x // 8) + 13 * (y // 8)) % 256)
+              for x in range(16)] for y in range(16)])
 
-    def make_media(batches):
-        import pandas as _pd
-
-        from connect_spark.text.media_codecs import encode_jpeg_arith
-
-        for pdf in batches:
-            payloads = []
-            for e in pdf["event_id"]:
-                e = int(e)
-                rows = [[((5 * e + 31 * (x // 8) + 43 * (y // 8)) % 256,
-                          (2 * e + 59 * (x // 8) + 17 * (y // 8)) % 256,
-                          (11 * e + 53 * (x // 8) + 13 * (y // 8)) % 256)
-                         for x in range(16)] for y in range(16)]
-                payloads.append(encode_jpeg_arith(rows))
-            yield _pd.DataFrame({
-                "media_id": pdf["event_id"],
-                "payload": payloads,
-                "mime": ["image/jpeg"] * len(pdf),
-                "meta": [{} for _ in range(len(pdf))],
-            })
-
-    media = ev.mapInPandas(make_media, MEDIA_SCHEMA)
+    media = _synth_media(spark, sf_dir, "image/jpeg", payload)
     return bmp_pixel_stats(resize_media(media, 2, 2)).select(
         F.col("media_id").alias("event_id"),
         "width", "height", "sum_rgb", "pos_checksum")
@@ -2199,51 +1965,35 @@ def multimodal_gif_animation(spark: SparkSession,
 
     Scale: zero-shuffle narrow mapInPandas repartitioned across
     cores — the multimodal seam shape."""
-    ev = (load_table(spark, sf_dir, "events").select("event_id")
-          .repartition(spark.sparkContext.defaultParallelism))
+    from connect_spark.text.media_codecs import (
+        compose_gif_frames, encode_gif_animation)
 
-    def run(batches):
-        import pandas as _pd
+    pal = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
 
-        from connect_spark.text.media_codecs import (
-            compose_gif_frames, encode_gif_animation)
+    def val(px):
+        return px[0] + 2 * px[1] + 3 * px[2]
 
-        pal = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
+    def roundtrip(e):
+        a = e % 3 + 1
+        b = (e + 1) % 3 + 1
+        c = (e + 2) % 3 + 1
+        specs = [
+            {"grid": [[a] * 6 for _ in range(6)],
+             "disposal": 1, "interlace": True},
+            {"grid": [[b if (x + y + e) % 2 else 0 for x in range(3)]
+                      for y in range(3)],
+             "left": 1, "top": 1, "disposal": 2, "transparent": 0},
+            {"grid": [[c] * 2 for _ in range(2)],
+             "left": 3, "top": 3, "disposal": 0},
+        ]
+        gif = encode_gif_animation(specs, pal, 6, 6, bg_index=0)
+        frames = compose_gif_frames(gif)["frames"]
+        return [(e, sum((f + 1) * (y + 2) * (x + 3) * val(frames[f][y][x])
+                        for f in range(3) for y in range(6)
+                        for x in range(6)))]
 
-        def val(px):
-            return px[0] + 2 * px[1] + 3 * px[2]
-
-        for pdf in batches:
-            checks = []
-            for e in pdf["event_id"]:
-                e = int(e)
-                a = e % 3 + 1
-                b = (e + 1) % 3 + 1
-                c = (e + 2) % 3 + 1
-                specs = [
-                    {"grid": [[a] * 6 for _ in range(6)],
-                     "disposal": 1, "interlace": True},
-                    {"grid": [[b if (x + y + e) % 2 else 0
-                               for x in range(3)]
-                              for y in range(3)],
-                     "left": 1, "top": 1, "disposal": 2,
-                     "transparent": 0},
-                    {"grid": [[c] * 2 for _ in range(2)],
-                     "left": 3, "top": 3, "disposal": 0},
-                ]
-                gif = encode_gif_animation(specs, pal, 6, 6,
-                                           bg_index=0)
-                frames = compose_gif_frames(gif)["frames"]
-                checks.append(sum(
-                    (f + 1) * (y + 2) * (x + 3) * val(frames[f][y][x])
-                    for f in range(3) for y in range(6)
-                    for x in range(6)))
-            yield _pd.DataFrame({
-                "event_id": pdf["event_id"],
-                "anim_checksum": _pd.Series(checks, dtype="int64"),
-            })
-
-    return ev.mapInPandas(run, "event_id BIGINT, anim_checksum BIGINT")
+    return flat_map(_event_ids(spark, sf_dir),
+                    "event_id BIGINT, anim_checksum BIGINT", roundtrip)
 
 
 MULTIMODAL_GIF_ANIM_SQL = """

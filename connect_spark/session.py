@@ -68,7 +68,10 @@ def ensure_session(spark: SparkSession) -> SparkSession:
 
 
 def _package_zip() -> str:
-    """Zip the package's ``.py`` files to a per-process temp path."""
+    """Zip the package's ``.py`` files to a per-process temp path,
+    removed when the interpreter exits (not sooner: local executors
+    fetch the original path on their first task)."""
+    import atexit
     import tempfile
     import zipfile
 
@@ -83,7 +86,15 @@ def _package_zip() -> str:
                     full = os.path.join(root, fn)
                     rel = os.path.relpath(full, pkg_dir)
                     zf.write(full, os.path.join("connect_spark", rel))
+    atexit.register(_remove_quietly, zpath)
     return zpath
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
 
 
 def _cpus() -> int:

@@ -20,9 +20,13 @@ parallelize within files.
 from __future__ import annotations
 
 import io
+import json
+import tarfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from connect_spark.boundary import flat_map
 
 SCANNERS = (
     "lines",
@@ -109,56 +113,30 @@ def _tar_members(df: DataFrame) -> DataFrame:
     """tar scanner: one message per archive member
     (scanners/tar.adoc); member name joins the path metadata."""
 
-    def expand(iterator):
-        import tarfile
+    def members(path, blob):
+        with tarfile.open(fileobj=io.BytesIO(bytes(blob))) as tf:
+            for member in tf.getmembers():
+                if member.isfile():
+                    yield (f"{path}!{member.name}",
+                           tf.extractfile(member).read())
 
-        import pandas as pd
-
-        for pdf in iterator:
-            paths, names, blobs = [], [], []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                with tarfile.open(fileobj=io.BytesIO(bytes(blob))) as tf:
-                    for member in tf.getmembers():
-                        if not member.isfile():
-                            continue
-                        paths.append(f"{path}!{member.name}")
-                        names.append(member.name)
-                        blobs.append(tf.extractfile(member).read())
-            yield pd.DataFrame(
-                {"path": paths, "member": names, "content": blobs}
-            )
-
-    out = df.select("path", "content").mapInPandas(
-        expand, "path STRING, member STRING, content BINARY"
-    )
-    return out.select("path", "content")
+    return flat_map(df.select("path", "content"),
+                    "path STRING, content BINARY", members)
 
 
 def _avro_records(df: DataFrame) -> DataFrame:
     """avro scanner: object-container-file blocks → one JSON message
     per record (scanners/avro.adoc), built on the pure-Python codec."""
 
-    def expand(iterator):
-        import json as _json
-
-        import pandas as pd
-
+    def records(path, blob):
         from connect_spark.functions.avro_codec import read_ocf
 
-        for pdf in iterator:
-            paths, blobs = [], []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                _, records = read_ocf(bytes(blob))
-                for rec in records:
-                    paths.append(path)
-                    blobs.append(
-                        _json.dumps(rec, sort_keys=True).encode("utf-8")
-                    )
-            yield pd.DataFrame({"path": paths, "content": blobs})
+        _, recs = read_ocf(bytes(blob))
+        for rec in recs:
+            yield path, json.dumps(rec, sort_keys=True).encode("utf-8")
 
-    return df.select("path", "content").mapInPandas(
-        expand, "path STRING, content BINARY"
-    )
+    return flat_map(df.select("path", "content"),
+                    "path STRING, content BINARY", records)
 
 
 def read_file_messages(

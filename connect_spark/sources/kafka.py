@@ -14,8 +14,13 @@ a cluster run would use.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from connect_spark.boundary import flat_map
 
 
 def kafka_reader_options(conf: dict) -> dict[str, str]:
@@ -122,52 +127,36 @@ def kafka_log_segment_input(spark: SparkSession, conf: dict) -> DataFrame:
         "key BINARY, value BINARY, headers STRING"
     )
 
-    def decode(batches):
-        import os as _os
-        import re as _re
-
-        import pandas as _pd
-
+    def decode(fpath, blob):
         from connect_spark.functions.kafka_records import (
             decode_segment,
             decode_segment_read_committed,
         )
 
-        for pdf in batches:
-            rows = {k: [] for k in ("partition", "offset",
-                                    "timestamp_ms", "key", "value",
-                                    "headers")}
-            for fpath, blob in zip(pdf["path"], pdf["content"]):
-                part = 0
-                if partition_from_name:
-                    # Kafka log dirs are <topic>-<partition>: anchor
-                    # to the TRAILING digits so topics containing
-                    # digits (events2024-0) resolve correctly
-                    m = _re.search(r"-(\d+)$", _os.path.basename(
-                        _os.path.dirname(fpath)) or "")
-                    if m:
-                        part = int(m.group(1))
-                if isolation == "read_committed":
-                    recs = decode_segment_read_committed(bytes(blob))
-                else:
-                    recs = decode_segment(bytes(blob))
-                for rec in recs:
-                    rows["partition"].append(part)
-                    rows["offset"].append(rec.offset)
-                    rows["timestamp_ms"].append(rec.timestamp_ms)
-                    rows["key"].append(rec.key)
-                    rows["value"].append(rec.value)
-                    rows["headers"].append(_json.dumps(
-                        [[k, (v.decode("utf-8", "replace")
-                              if v is not None else None)]
-                         for k, v in rec.headers]))
-            yield _pd.DataFrame(rows)
+        part = 0
+        if partition_from_name:
+            # Kafka log dirs are <topic>-<partition>: anchor to the
+            # TRAILING digits so topics containing digits
+            # (events2024-0) resolve correctly
+            m = re.search(r"-(\d+)$", os.path.basename(
+                os.path.dirname(fpath)) or "")
+            if m:
+                part = int(m.group(1))
+        if isolation == "read_committed":
+            recs = decode_segment_read_committed(bytes(blob))
+        else:
+            recs = decode_segment(bytes(blob))
+        for rec in recs:
+            yield (part, rec.offset, rec.timestamp_ms, rec.key, rec.value,
+                   _json.dumps([[k, (v.decode("utf-8", "replace")
+                                     if v is not None else None)]
+                                for k, v in rec.headers]))
 
-    return (
+    segments = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", conf.get("glob", "*.log"))
         .option("recursiveFileLookup", "true")
         .load(path)
         .select("path", "content")
-        .mapInPandas(decode, schema)
     )
+    return flat_map(segments, schema, decode)

@@ -19,12 +19,12 @@ scan is preserved, so a 100 TB media corpus decodes with zero shuffle.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from connect_spark.boundary import flat_map
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -198,36 +198,23 @@ def decode_media(df: DataFrame, decode_stub: bool | str = True) -> DataFrame:
     otherwise — the stub ceiling lifts automatically on a cluster
     with image libs installed."""
 
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        # resolved lazily: an all-real-mime batch must not trip the
-        # decode_stub=False gate for a decoder it never needs
-        _sel: list = []
+    # resolved lazily, once per task (each task unpickles its own
+    # copy): an all-real-mime task must not trip the decode_stub=False
+    # gate for a decoder it never needs
+    _sel: list = []
 
-        def fallback(payload: bytes):
-            if not _sel:
-                _sel.append(_select_decoder(decode_stub))
-            return _sel[0](payload)
+    def fallback(payload: bytes):
+        if not _sel:
+            _sel.append(_select_decoder(decode_stub))
+        return _sel[0](payload)
 
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "mime": pdf["mime"],
-                "byte_len": pdf["payload"].map(
-                    lambda b: 0 if b is None else len(b)
-                ),
-            }
-            decoded = [
-                _REAL_DECODERS.get(mime, fallback)(bytes(b or b""))
-                for mime, b in zip(pdf["mime"], pdf["payload"])
-            ]
-            out["width"] = [t[0] for t in decoded]
-            out["height"] = [t[1] for t in decoded]
-            out["feature"] = [t[2] for t in decoded]
-            yield pd.DataFrame(out)
+    def decode(media_id, payload, mime):
+        decoded = _REAL_DECODERS.get(mime, fallback)(bytes(payload or b""))
+        byte_len = 0 if payload is None else len(payload)
+        return [(media_id, mime, byte_len, *decoded)]
 
-    return df.mapInPandas(decode_batches, FEATURE_SCHEMA)
+    return flat_map(
+        df.select("media_id", "payload", "mime"), FEATURE_SCHEMA, decode)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -285,57 +272,35 @@ def sample_frames(
         walk(12, 8 + _st.unpack("<I", raw[4:8])[0])
         return chunks, fps
 
-    def frame_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, srcs, tss, frames = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload or b"")
-                if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
-                    chunks, fps = _avi_jpeg_chunks(raw)
-                    if chunks:
-                        step = (1000 // fps) if fps else frame_interval_ms
-                        # one row explodes to EXACTLY n_frames rows
-                        # (the documented contract, same as the stub
-                        # path): short streams cycle their chunks —
-                        # source_frame records the true chunk index
-                        # and ts_ms the true stream position, so a
-                        # repeated frame is distinguishable and never
-                        # carries a fabricated past-end timestamp
-                        for i in range(n_frames):
-                            src = i % len(chunks)
-                            ids.append(mid)
-                            idxs.append(i)
-                            srcs.append(src)
-                            tss.append(src * step)
-                            frames.append(chunks[src])
-                        continue
-                    # zero video chunks: fall through to the stub path
-                if not decode_stub:
-                    raise NotImplementedError(
-                        "real frame extraction beyond MJPEG-in-AVI "
-                        "requires ffmpeg, which has no Python import "
-                        "probe here — run with decode_stub=True"
-                    )
-                chunk = max(1, len(raw) // n_frames)
+    def frames(mid, payload):
+        raw = bytes(payload or b"")
+        if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
+            chunks, fps = _avi_jpeg_chunks(raw)
+            if chunks:
+                step = (1000 // fps) if fps else frame_interval_ms
+                # one row explodes to EXACTLY n_frames rows (the
+                # documented contract, same as the stub path): short
+                # streams cycle their chunks — source_frame records
+                # the true chunk index and ts_ms the true stream
+                # position, so a repeated frame is distinguishable and
+                # never carries a fabricated past-end timestamp
                 for i in range(n_frames):
-                    ids.append(mid)
-                    idxs.append(i)
-                    srcs.append(i)
-                    tss.append(i * frame_interval_ms)
-                    frames.append(raw[i * chunk:(i + 1) * chunk])
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_idx": idxs,
-                    "source_frame": srcs,
-                    "ts_ms": tss,
-                    "frame": frames,
-                }
+                    src = i % len(chunks)
+                    yield mid, i, src, src * step, chunks[src]
+                return
+            # zero video chunks: fall through to the stub path
+        if not decode_stub:
+            raise NotImplementedError(
+                "real frame extraction beyond MJPEG-in-AVI "
+                "requires ffmpeg, which has no Python import "
+                "probe here — run with decode_stub=True"
             )
+        chunk = max(1, len(raw) // n_frames)
+        for i in range(n_frames):
+            yield (mid, i, i, i * frame_interval_ms,
+                   raw[i * chunk:(i + 1) * chunk])
 
-    return df.mapInPandas(frame_batches, FRAME_SCHEMA)
+    return flat_map(df.select("media_id", "payload"), FRAME_SCHEMA, frames)
 
 
 def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
@@ -378,38 +343,34 @@ def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
     mixed-mime corpus without dropping rows."""
     from connect_spark.text.media_codecs import _PNG_SIG, resize_raster
 
-    def resize_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, mimes, metas = [], [], []
-            for payload, mime, meta in zip(
-                    pdf["payload"], pdf["mime"], pdf["meta"]):
-                m = dict(meta or {})
-                m["resize"] = f"{width}x{height}"
-                if mime in _RASTER_MIMES:
-                    resized = resize_raster(bytes(payload), width, height)
-                    payloads.append(resized)
-                    # the container can change under resize (JPEG →
-                    # PNG): the mime must describe the NEW bytes or a
-                    # mime-keyed consumer downstream dispatches the
-                    # wrong decoder
-                    if resized[:8] == _PNG_SIG and mime != "image/png":
-                        m["resize_container"] = "png"
-                        mime = "image/png"
-                else:
-                    payloads.append(payload)
-                    m["resize_applied"] = "metadata-only"
-                mimes.append(mime)
-                metas.append(m)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": payloads,
-                "mime": mimes,
-                "meta": metas,
-            })
+    def resize(media_id, payload, mime, meta):
+        m = dict(meta or {})
+        m["resize"] = f"{width}x{height}"
+        if mime in _RASTER_MIMES:
+            payload = resize_raster(bytes(payload), width, height)
+            # the container can change under resize (JPEG → PNG): the
+            # mime must describe the NEW bytes or a mime-keyed
+            # consumer downstream dispatches the wrong decoder
+            if payload[:8] == _PNG_SIG and mime != "image/png":
+                m["resize_container"] = "png"
+                mime = "image/png"
+        else:
+            m["resize_applied"] = "metadata-only"
+        return [(media_id, payload, mime, m)]
 
-    return df.mapInPandas(resize_batches, MEDIA_SCHEMA)
+    return flat_map(
+        df.select(*MEDIA_SCHEMA.fieldNames()), MEDIA_SCHEMA, resize)
+
+
+def _rgb_stats(width: int, rows) -> tuple[int, int]:
+    """(sum of all channel values, position-weighted checksum) over a
+    top-down raster of (r, g, b) rows; see bmp_pixel_stats."""
+    s = c = 0
+    for y, row in enumerate(rows):
+        for x, (r, g, b) in enumerate(row):
+            s += r + g + b
+            c += (y * width + x + 1) * (r * 65536 + g * 256 + b)
+    return s, c
 
 
 def bmp_pixel_stats(df: DataFrame) -> DataFrame:
@@ -423,30 +384,13 @@ def bmp_pixel_stats(df: DataFrame) -> DataFrame:
         decode_raster_pixels as decode_bmp_pixels,
     )
 
-    def stat_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, checks = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_bmp_pixels(bytes(payload))
-                w, h = d["width"], d["height"]
-                s = c = 0
-                for y, row in enumerate(d["pixels"]):
-                    for x, (r, g, b) in enumerate(row):
-                        s += r + g + b
-                        c += (y * w + x + 1) * (r * 65536 + g * 256 + b)
-                ids.append(mid)
-                ws.append(w)
-                hs.append(h)
-                sums.append(s)
-                checks.append(c)
-            yield pd.DataFrame({
-                "media_id": ids, "width": ws, "height": hs,
-                "sum_rgb": sums, "pos_checksum": checks,
-            })
+    def stats(media_id, payload):
+        d = decode_bmp_pixels(bytes(payload))
+        w = d["width"]
+        return [(media_id, w, d["height"], *_rgb_stats(w, d["pixels"]))]
 
-    return df.mapInPandas(stat_batches, PIXEL_STATS_SCHEMA)
+    return flat_map(
+        df.select("media_id", "payload"), PIXEL_STATS_SCHEMA, stats)
 
 
 GIF_FRAME_STATS_SCHEMA = T.StructType(
@@ -470,34 +414,16 @@ def gif_frame_stats(df: DataFrame, frame_idx: int) -> DataFrame:
     the end (Python slicing convention)."""
     from connect_spark.text.media_codecs import decode_gif_frames
 
-    def stat_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nfs, ws, hs, sums, checks = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_gif_frames(bytes(payload))
-                grid = d["frames"][frame_idx]
-                pal = d["palettes"][frame_idx]  # frame's effective table
-                w, h = d["width"], d["height"]
-                s = c = 0
-                for y, row in enumerate(grid):
-                    for x, idx in enumerate(row):
-                        r, g, b = pal[idx]
-                        s += r + g + b
-                        c += (y * w + x + 1) * (r * 65536 + g * 256 + b)
-                ids.append(mid)
-                nfs.append(len(d["frames"]))
-                ws.append(w)
-                hs.append(h)
-                sums.append(s)
-                checks.append(c)
-            yield pd.DataFrame({
-                "media_id": ids, "n_frames": nfs, "width": ws,
-                "height": hs, "sum_rgb": sums, "pos_checksum": checks,
-            })
+    def stats(media_id, payload):
+        d = decode_gif_frames(bytes(payload))
+        pal = d["palettes"][frame_idx]  # frame's effective table
+        rows = ([pal[i] for i in row] for row in d["frames"][frame_idx])
+        w = d["width"]
+        return [(media_id, len(d["frames"]), w, d["height"],
+                 *_rgb_stats(w, rows))]
 
-    return df.mapInPandas(stat_batches, GIF_FRAME_STATS_SCHEMA)
+    return flat_map(
+        df.select("media_id", "payload"), GIF_FRAME_STATS_SCHEMA, stats)
 
 
 def avi_frame_stats(df: DataFrame, frame_idx: int) -> DataFrame:
@@ -510,32 +436,14 @@ def avi_frame_stats(df: DataFrame, frame_idx: int) -> DataFrame:
     conversion.  Same output schema as gif_frame_stats."""
     from connect_spark.text.media_codecs import decode_avi_frames
 
-    def stat_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nfs, ws, hs, sums, checks = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_avi_frames(bytes(payload))
-                grid = d["frames"][frame_idx]
-                w, h = d["width"], d["height"]
-                s = c = 0
-                for y, row in enumerate(grid):
-                    for x, (r, g, b) in enumerate(row):
-                        s += r + g + b
-                        c += (y * w + x + 1) * (r * 65536 + g * 256 + b)
-                ids.append(mid)
-                nfs.append(d["n_frames"])
-                ws.append(w)
-                hs.append(h)
-                sums.append(s)
-                checks.append(c)
-            yield pd.DataFrame({
-                "media_id": ids, "n_frames": nfs, "width": ws,
-                "height": hs, "sum_rgb": sums, "pos_checksum": checks,
-            })
+    def stats(media_id, payload):
+        d = decode_avi_frames(bytes(payload))
+        w = d["width"]
+        return [(media_id, d["n_frames"], w, d["height"],
+                 *_rgb_stats(w, d["frames"][frame_idx]))]
 
-    return df.mapInPandas(stat_batches, GIF_FRAME_STATS_SCHEMA)
+    return flat_map(
+        df.select("media_id", "payload"), GIF_FRAME_STATS_SCHEMA, stats)
 
 
 AUDIO_WINDOW_SCHEMA = T.StructType(
@@ -559,25 +467,14 @@ def wav_window_features(df: DataFrame, window: int = 16) -> DataFrame:
     output value integer so oracles recompute it bit-for-bit."""
     from connect_spark.text.media_codecs import decode_wav
 
-    def feature_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, wins, ns, energies, zcs = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples = decode_wav(bytes(payload))["samples"]
-                for w0 in range(0, len(samples), window):
-                    seg = samples[w0:w0 + window]
-                    ids.append(mid)
-                    wins.append(w0 // window)
-                    ns.append(len(seg))
-                    energies.append(sum(s * s for s in seg))
-                    zcs.append(sum(
-                        1 for i in range(1, len(seg))
-                        if seg[i - 1] * seg[i] < 0))
-            yield pd.DataFrame({
-                "media_id": ids, "win_idx": wins, "n_samples": ns,
-                "energy": energies, "zero_crossings": zcs,
-            })
+    def windows(media_id, payload):
+        samples = decode_wav(bytes(payload))["samples"]
+        for w0 in range(0, len(samples), window):
+            seg = samples[w0:w0 + window]
+            yield (media_id, w0 // window, len(seg),
+                   sum(s * s for s in seg),
+                   sum(1 for i in range(1, len(seg))
+                       if seg[i - 1] * seg[i] < 0))
 
-    return df.mapInPandas(feature_batches, AUDIO_WINDOW_SCHEMA)
+    return flat_map(
+        df.select("media_id", "payload"), AUDIO_WINDOW_SCHEMA, windows)

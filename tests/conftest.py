@@ -57,3 +57,26 @@ def sf_dir() -> str:
 def pytest_unconfigure(config):
     if _scratch is not None:
         shutil.rmtree(_scratch, ignore_errors=True)
+
+
+_CONFORMANCE_FILES = ("test_reference_corpus.py", "test_reference_examples.py")
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One line naming the conformance gap: how many reference-corpus
+    and reference-example tests were skipped, and why."""
+    skipped = [
+        r for r in terminalreporter.stats.get("skipped", [])
+        if r.nodeid.split("::")[0].endswith(_CONFORMANCE_FILES)
+    ]
+    if not skipped:
+        return
+    reasons = sorted({
+        r.longrepr[2] if isinstance(r.longrepr, tuple) else str(r.longrepr)
+        for r in skipped
+    })
+    terminalreporter.write_line(
+        f"CONFORMANCE GAP: {len(skipped)} reference-corpus/example tests "
+        f"skipped ({'; '.join(reasons)})",
+        yellow=True, bold=True,
+    )

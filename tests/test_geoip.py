@@ -77,3 +77,29 @@ def test_geoip_full_record_json(spark, mmdb):
         df.select(geoip_udf(mmdb)(F.col("ip")).alias("j")).collect()[0].j
     )
     assert rec == {"country": {"iso_code": "DE"}}
+
+
+def test_geoip_reader_cached_in_the_worker_module(tmp_path, mmdb, monkeypatch):
+    """The UDF body, shipped the way a task ships it, caches its reader
+    in the module's `_GEOIP_READERS`, not in a pickled copy of it, so
+    each worker parses the MMDB once."""
+    from pyspark import cloudpickle
+
+    from connect_spark.bloblang import methods
+
+    path = str(tmp_path / "db.mmdb")
+    with open(path, "wb") as fh:
+        fh.write(mmdb)
+    bodies = []
+    real_row_udf = methods.row_udf
+
+    def capture(return_type, fn, *args):
+        bodies.append(fn)
+        return real_row_udf(return_type, fn, *args)
+
+    monkeypatch.setattr(methods, "row_udf", capture)
+    monkeypatch.setattr(methods, "_GEOIP_READERS", {})
+    methods._geoip_method(("country",))(F.col("ip"), path)
+    one = cloudpickle.loads(cloudpickle.dumps(bodies[0]))
+    assert json.loads(one("81.2.69.142"))["iso_code"] == "GB"
+    assert isinstance(methods._GEOIP_READERS.get(path), MmdbReader)

@@ -105,3 +105,34 @@ def test_foreign_session_ships_package_once_for_every_entry_point(
     assert proc.returncode == 0, out[-4000:]
     assert "mapping fell back to the dynamic evaluator" in proc.stdout
     assert "BOOTSTRAP_OK" in proc.stdout
+
+
+ZIP_SCRIPT = r'''
+import os
+import sys
+
+sys.path.insert(0, sys.argv[1])
+
+from connect_spark.session import get_spark
+
+spark = get_spark("zip_cleanup")
+assert spark.range(4).mapInPandas(lambda it: it, "id long").count() == 4
+print("PID", os.getpid())
+'''
+
+
+def test_package_zip_removed_at_exit(tmp_path):
+    """The per-process package zip that `ensure_session` ships is gone
+    once the process exits."""
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    script = tmp_path / "zip_driver.py"
+    script.write_text(ZIP_SCRIPT)
+    env = dict(os.environ, TMPDIR=str(tmpdir), SPARK_GRAFT_CPUS="1")
+    proc = subprocess.run(
+        [sys.executable, str(script), REPO], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, (proc.stdout + proc.stderr)[-4000:]
+    pid = proc.stdout.split("PID", 1)[1].split()[0]
+    assert not (tmpdir / f"connect_spark_pkg_{pid}.zip").exists()
