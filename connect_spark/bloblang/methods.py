@@ -363,9 +363,10 @@ def _compare_bcrypt(c: Column, hashed_secret: str) -> Column:
 def _compare_argon2(c: Column, hashed_secret: str) -> Column:
     """methods.adoc (string section) compare_argon2 — true/false
     whether the input matches an argon2i/argon2id PHC hash
-    (internal/impl/crypto/argon2.go:112-160). Pure-Python RFC 9106
-    (functions/argon2_py.py), oracle-pinned against the cryptography
-    package's Rust Argon2; malformed hashes yield null."""
+    (internal/impl/crypto/argon2.go:112-160). The tag is the
+    cryptography package's RFC 9106 Argon2 (functions/argon2_py.py);
+    malformed hashes, and parameters the library rejects (a salt
+    under 8 bytes, for one), yield null."""
     from connect_spark.functions.argon2_py import compare_argon2
 
     return row_udf(

@@ -1,121 +1,22 @@
-"""Pure-Python Argon2 (RFC 9106) for the Bloblang `compare_argon2`
-method (reference: internal/impl/crypto/argon2.go — decodes the PHC
+"""Argon2 (RFC 9106) for the Bloblang `compare_argon2` method
+(reference: internal/impl/crypto/argon2.go — decodes the PHC
 `$argon2(i|id)$v=..$m=..,t=..,p=..$salt$key` string and compares a
 recomputed tag in constant time).
 
-Implements argon2i / argon2d / argon2id from the spec: H0 via BLAKE2b
-(hashlib), the variable-length H' construction, the G compression
-function (two BLAKE2b-style permutation sweeps with the 32-bit
-multiply variant of the mixing function), data-independent J1/J2
-addressing for the i-side, and the RFC's reference-area index mapping.
-Bit-exactness is pinned in tests against the `cryptography` package's
-Rust Argon2{i,d,id} across parameter grids.
-
-Performance note: pure Python fills ~250 blocks/s-ish; production
-parameters (m=64 MiB) are minutes — verification here is an edge
-operation, and the engine's tests use RFC-scale parameters (m≤256).
+The tag comes from the `cryptography` package's Argon2d/Argon2i/
+Argon2id KDFs, as the reference's comes from golang.org/x/crypto/argon2;
+this module owns the PHC string format and the compare. The library's
+parameter checks apply: a salt shorter than 8 bytes, a tag shorter than
+4 bytes or memory below 8 KiB per lane raises ValueError. The RFC 9106
+§5 vectors are pinned in tests.
 """
 
 from __future__ import annotations
 
-import hashlib
 import hmac
 from base64 import b64decode, b64encode
 
 __all__ = ["argon2_tag", "argon2_phc_hash", "compare_argon2"]
-
-_MASK64 = (1 << 64) - 1
-
-
-def _le32(x: int) -> bytes:
-    return (x & 0xFFFFFFFF).to_bytes(4, "little")
-
-
-def _le64(x: int) -> bytes:
-    return (x & _MASK64).to_bytes(8, "little")
-
-
-def _h_prime(taglen: int, data: bytes) -> bytes:
-    """RFC 9106 §3.3 variable-length hash H'."""
-    if taglen <= 64:
-        return hashlib.blake2b(
-            _le32(taglen) + data, digest_size=taglen
-        ).digest()
-    out = bytearray()
-    v = hashlib.blake2b(_le32(taglen) + data, digest_size=64).digest()
-    out += v[:32]
-    remaining = taglen - 32
-    while remaining > 64:
-        v = hashlib.blake2b(v, digest_size=64).digest()
-        out += v[:32]
-        remaining -= 32
-    out += hashlib.blake2b(v, digest_size=remaining).digest()
-    return bytes(out)
-
-
-def _gb(v, a, b, c, d):
-    """BLAKE2b mixing with Argon2's 32-bit multiply addition."""
-    va, vb, vc, vd = v[a], v[b], v[c], v[d]
-    va = (va + vb + 2 * (va & 0xFFFFFFFF) * (vb & 0xFFFFFFFF)) & _MASK64
-    vd ^= va
-    vd = ((vd >> 32) | (vd << 32)) & _MASK64
-    vc = (vc + vd + 2 * (vc & 0xFFFFFFFF) * (vd & 0xFFFFFFFF)) & _MASK64
-    vb ^= vc
-    vb = ((vb >> 24) | (vb << 40)) & _MASK64
-    va = (va + vb + 2 * (va & 0xFFFFFFFF) * (vb & 0xFFFFFFFF)) & _MASK64
-    vd ^= va
-    vd = ((vd >> 16) | (vd << 48)) & _MASK64
-    vc = (vc + vd + 2 * (vc & 0xFFFFFFFF) * (vd & 0xFFFFFFFF)) & _MASK64
-    vb ^= vc
-    vb = ((vb >> 63) | (vb << 1)) & _MASK64
-    v[a], v[b], v[c], v[d] = va, vb, vc, vd
-
-
-def _p(v):
-    """The permutation P over 16 64-bit words (RFC 9106 §3.6)."""
-    _gb(v, 0, 4, 8, 12)
-    _gb(v, 1, 5, 9, 13)
-    _gb(v, 2, 6, 10, 14)
-    _gb(v, 3, 7, 11, 15)
-    _gb(v, 0, 5, 10, 15)
-    _gb(v, 1, 6, 11, 12)
-    _gb(v, 2, 7, 8, 13)
-    _gb(v, 3, 4, 9, 14)
-
-
-def _g(x, y):
-    """Compression function G over 1024-byte blocks as 128-int lists."""
-    r = [a ^ b for a, b in zip(x, y)]
-    q = list(r)
-    # rows: 8 sweeps over contiguous 16-word rows
-    for row in range(8):
-        s = row * 16
-        v = q[s : s + 16]
-        _p(v)
-        q[s : s + 16] = v
-    # columns: 8 sweeps over 2-word-wide columns
-    for col in range(8):
-        idx = [
-            16 * r_ + 2 * col + o for r_ in range(8) for o in (0, 1)
-        ]
-        v = [q[i] for i in idx]
-        _p(v)
-        for i, w in zip(idx, v):
-            q[i] = w
-    return [a ^ b for a, b in zip(q, r)]
-
-
-_ZERO = [0] * 128
-
-
-def _block_from_bytes(b: bytes):
-    return [
-        int.from_bytes(b[i : i + 8], "little") for i in range(0, 1024, 8)
-    ]
-
-
-def _block_to_bytes(blk) -> bytes:
-    return b"".join(_le64(w) for w in blk)
 
 
 def argon2_tag(
@@ -127,108 +28,27 @@ def argon2_tag(
     parallelism: int,
     tag_length: int = 32,
     variant: str = "argon2id",
-    version: int = 0x13,
-    secret: bytes = b"",
-    associated: bytes = b"",
+    secret: bytes | None = None,
+    associated: bytes | None = None,
 ) -> bytes:
-    """Compute the raw Argon2 tag (RFC 9106 §3)."""
-    y = {"argon2d": 0, "argon2i": 1, "argon2id": 2}[variant]
-    p = parallelism
-    h0 = hashlib.blake2b(
-        _le32(p)
-        + _le32(tag_length)
-        + _le32(memory_cost)
-        + _le32(time_cost)
-        + _le32(version)
-        + _le32(y)
-        + _le32(len(password))
-        + password
-        + _le32(len(salt))
-        + salt
-        + _le32(len(secret))
-        + secret
-        + _le32(len(associated))
-        + associated,
-        digest_size=64,
-    ).digest()
+    """Compute the raw Argon2 (version 0x13) tag; `memory_cost` is in
+    KiB."""
+    from cryptography.hazmat.primitives.kdf import argon2
 
-    m_prime = 4 * p * (memory_cost // (4 * p))
-    q = m_prime // p  # lane length (columns)
-    seg = q // 4  # segment length
-    lanes = [[None] * q for _ in range(p)]
-    for i in range(p):
-        lanes[i][0] = _block_from_bytes(
-            _h_prime(1024, h0 + _le32(0) + _le32(i))
-        )
-        lanes[i][1] = _block_from_bytes(
-            _h_prime(1024, h0 + _le32(1) + _le32(i))
-        )
-
-    for r in range(time_cost):
-        for s in range(4):
-            for lane in range(p):
-                _fill_segment(
-                    lanes, r, s, lane, p, q, seg, time_cost, m_prime, y
-                )
-
-    final = list(lanes[0][q - 1])
-    for i in range(1, p):
-        final = [a ^ b for a, b in zip(final, lanes[i][q - 1])]
-    return _h_prime(tag_length, _block_to_bytes(final))
-
-
-def _fill_segment(lanes, r, s, lane, p, q, seg, t, m_prime, y):
-    data_independent = y == 1 or (y == 2 and r == 0 and s < 2)
-    if data_independent:
-        addresses = []
-        counter = 1
-        input_base = [
-            r, lane, s, m_prime, t, y, 0,
-        ] + [0] * 121
-
-    # pass 0, slice 0: columns 0 and 1 are the H'-seeded blocks
-    start = 2 if (r == 0 and s == 0) else 0
-    for idx in range(start, seg):
-        j = s * seg + idx  # column of the block being computed
-        prev = lanes[lane][(j - 1) % q]
-        if data_independent:
-            a_i = idx % 128
-            if a_i == 0 or not addresses:
-                inp = list(input_base)
-                inp[6] = counter
-                counter += 1
-                addresses = _g(_ZERO, _g(_ZERO, inp))
-            pr = addresses[idx % 128]
-            j1 = pr & 0xFFFFFFFF
-            j2 = (pr >> 32) & 0xFFFFFFFF
-        else:
-            j1 = prev[0] & 0xFFFFFFFF
-            j2 = (prev[0] >> 32) & 0xFFFFFFFF
-
-        ref_lane = lane if (r == 0 and s == 0) else j2 % p
-        same_lane = ref_lane == lane
-        # reference area size W (RFC 9106 §3.4.1.3)
-        if r == 0:
-            if s == 0:
-                w = idx - 1
-            elif same_lane:
-                w = s * seg + idx - 1
-            else:
-                w = s * seg - (1 if idx == 0 else 0)
-        elif same_lane:
-            w = q - seg + idx - 1
-        else:
-            w = q - seg - (1 if idx == 0 else 0)
-        x = (j1 * j1) >> 32
-        zz = w - 1 - ((w * x) >> 32)
-        start_pos = 0 if r == 0 else ((s + 1) * seg) % q
-        ref_index = (start_pos + zz) % q
-
-        new = _g(prev, lanes[ref_lane][ref_index])
-        if r > 0:  # XOR with the overwritten block (version 0x13)
-            old = lanes[lane][j]
-            new = [a ^ b for a, b in zip(new, old)]
-        lanes[lane][j] = new
+    kdf = {
+        "argon2d": argon2.Argon2d,
+        "argon2i": argon2.Argon2i,
+        "argon2id": argon2.Argon2id,
+    }[variant]
+    return kdf(
+        salt=salt,
+        length=tag_length,
+        iterations=time_cost,
+        lanes=parallelism,
+        memory_cost=memory_cost,
+        ad=associated,
+        secret=secret,
+    ).derive(password)
 
 
 # --- PHC string format (argon2.go:47-110) ---------------------------

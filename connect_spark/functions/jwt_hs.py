@@ -2,15 +2,20 @@
 (methods.adoc:3982-4491 parse_jwt_*/sign_jwt_* — reference
 internal/impl/crypto/jwt_{parse,sign}.go).
 
-Stdlib only, Arrow-batched through `boundary.row_udf`: HMAC for HS,
-RSASSA-PKCS1-v1_5 (RFC 8017) for RS, and ECDSA with RFC 6979 nonces
-(functions/ecdsa.py) for ES. Each family has one sign and one parse
-function; a parse checks the header `alg`, and a token with the wrong
-alg, a bad signature or a malformed shape parses to null."""
+Arrow-batched through `boundary.row_udf`: stdlib HMAC for HS,
+RSASSA-PKCS1-v1_5 (RFC 8017) as `pow` over the key integers for RS
+(the API takes bare (n, d) tuples, from which the `cryptography`
+package cannot build a private key), and the `cryptography` package's
+deterministic ECDSA (RFC 6979) for ES. PEM keys load through
+`cryptography` too; it is imported inside the functions that use it,
+so importing this module stays cheap. Each family has one sign and one
+parse function; a parse checks the header `alg`, and a token with the
+wrong alg, a bad signature or a malformed shape parses to null."""
 
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import hmac
 import json
@@ -27,38 +32,6 @@ def _b64url(data: bytes) -> str:
 
 def _b64url_decode(s: str) -> bytes:
     return base64.urlsafe_b64decode(s + "=" * (-len(s) % 4))
-
-
-# Minimal DER walk for RSA public keys (PKCS#1 RSAPublicKey or X.509
-# SubjectPublicKeyInfo) so PEM-published keys verify directly.
-
-def _der_read(data: bytes, pos: int) -> tuple[int, bytes, int]:
-    tag = data[pos]
-    length = data[pos + 1]
-    pos += 2
-    if length & 0x80:
-        n_bytes = length & 0x7F
-        length = int.from_bytes(data[pos:pos + n_bytes], "big")
-        pos += n_bytes
-    return tag, data[pos:pos + length], pos + length
-
-
-def rsa_public_from_pem(pem: str) -> tuple[int, int]:
-    """PEM (PKCS#1 'RSA PUBLIC KEY' or SPKI 'PUBLIC KEY') → (n, e)."""
-    body = "".join(
-        l for l in pem.strip().splitlines() if not l.startswith("-")
-    )
-    der = base64.b64decode(body)
-    tag, seq, _ = _der_read(der, 0)
-    # SPKI: SEQUENCE { SEQUENCE{oid,null}, BIT STRING { RSAPublicKey } }
-    t1, first, after = _der_read(seq, 0)
-    if t1 == 0x30:  # algorithm identifier → SPKI
-        t2, bitstr, _ = _der_read(seq, after)
-        inner = bitstr[1:]  # skip unused-bits octet
-        _, seq, _ = _der_read(inner, 0)
-        t1, first, after = _der_read(seq, 0)
-    _, e_bytes, _ = _der_read(seq, after)
-    return int.from_bytes(first, "big"), int.from_bytes(e_bytes, "big")
 
 
 _HASHES = {
@@ -192,7 +165,124 @@ def parse_jwt_rs(
     )(token)
 
 
-_EC_OCTETS = {"ES256": 32, "ES384": 48, "ES512": 66}
+
+
+# ------------------------------------------------------------ PEM keys
+
+
+def _pem_key(pem: str, family: str, private: bool):
+    """Load a PEM key with `cryptography` (PKCS#1, SEC1 or PKCS#8
+    private keys; PKCS#1 or SPKI public keys). `family` is "RSA" or
+    "EC"; a key of the other family raises ValueError."""
+    from cryptography.hazmat.primitives import serialization
+    from cryptography.hazmat.primitives.asymmetric import ec, rsa
+
+    if private:
+        key = serialization.load_pem_private_key(pem.encode(), None)
+        want = {"RSA": rsa.RSAPrivateKey, "EC": ec.EllipticCurvePrivateKey}
+    else:
+        key = serialization.load_pem_public_key(pem.encode())
+        want = {"RSA": rsa.RSAPublicKey, "EC": ec.EllipticCurvePublicKey}
+    if not isinstance(key, want[family]):
+        raise ValueError(f"not an {family} key")
+    return key
+
+
+def rsa_public_from_pem(pem: str) -> tuple[int, int]:
+    """PEM (PKCS#1 'RSA PUBLIC KEY' or SPKI 'PUBLIC KEY') → (n, e)."""
+    nums = _pem_key(pem, "RSA", private=False).public_numbers()
+    return nums.n, nums.e
+
+
+def rsa_private_from_pem(pem: str) -> tuple[int, int, int]:
+    """PKCS#1 'RSA PRIVATE KEY' or PKCS#8 'PRIVATE KEY' → (n, e, d)."""
+    nums = _pem_key(pem, "RSA", private=True).private_numbers()
+    return nums.public_numbers.n, nums.public_numbers.e, nums.d
+
+
+# ------------------------------------------------------------------ ES
+
+_P_NAMES = {"secp256r1": "P-256", "secp384r1": "P-384", "secp521r1": "P-521"}
+
+
+def _es_curve_hash(alg: str):
+    """JOSE alg → (curve, hash), RFC 7518 §3.4."""
+    from cryptography.hazmat.primitives import hashes
+    from cryptography.hazmat.primitives.asymmetric import ec
+
+    curve, h = {
+        "ES256": (ec.SECP256R1, hashes.SHA256),
+        "ES384": (ec.SECP384R1, hashes.SHA384),
+        "ES512": (ec.SECP521R1, hashes.SHA512),
+    }[alg]
+    return curve(), h()
+
+
+# Module-level caches: a worker builds each key once, not once a row.
+@functools.lru_cache(maxsize=64)
+def _es_private_key(d: int, alg: str):
+    from cryptography.hazmat.primitives.asymmetric import ec
+
+    return ec.derive_private_key(d, _es_curve_hash(alg)[0])
+
+
+@functools.lru_cache(maxsize=64)
+def _es_public_key(x: int, y: int, alg: str):
+    """Raises ValueError for a point that is not on the curve."""
+    from cryptography.hazmat.primitives.asymmetric import ec
+
+    curve = _es_curve_hash(alg)[0]
+    return ec.EllipticCurvePublicNumbers(x, y, curve).public_key()
+
+
+def _es_pem(pem: str, alg: str, private: bool):
+    """An EC PEM key whose curve must be the one `alg` names."""
+    key = _pem_key(pem, "EC", private)
+    want = _es_curve_hash(alg)[0].name
+    if key.curve.name != want:
+        raise ValueError(
+            f"{alg} needs a {_P_NAMES[want]} key, "
+            f"PEM is {_P_NAMES.get(key.curve.name, key.curve.name)}"
+        )
+    return key
+
+
+def es_sign(msg: bytes, d: int, alg: str) -> bytes:
+    """Deterministic ECDSA (RFC 6979) as the raw r || s of RFC 7518."""
+    from cryptography.hazmat.primitives.asymmetric import ec
+    from cryptography.hazmat.primitives.asymmetric.utils import (
+        decode_dss_signature,
+    )
+
+    curve, h = _es_curve_hash(alg)
+    der = _es_private_key(d, alg).sign(
+        msg, ec.ECDSA(h, deterministic_signing=True)
+    )
+    r, s = decode_dss_signature(der)
+    octets = (curve.key_size + 7) // 8
+    return r.to_bytes(octets, "big") + s.to_bytes(octets, "big")
+
+
+def es_verify(msg: bytes, raw: bytes, q: tuple[int, int], alg: str) -> bool:
+    from cryptography.exceptions import InvalidSignature
+    from cryptography.hazmat.primitives.asymmetric import ec
+    from cryptography.hazmat.primitives.asymmetric.utils import (
+        encode_dss_signature,
+    )
+
+    curve, h = _es_curve_hash(alg)
+    octets = (curve.key_size + 7) // 8
+    if len(raw) != 2 * octets:
+        return False
+    r = int.from_bytes(raw[:octets], "big")
+    s = int.from_bytes(raw[octets:], "big")
+    try:
+        _es_public_key(*q, alg).verify(
+            encode_dss_signature(r, s), msg, ec.ECDSA(h)
+        )
+    except InvalidSignature:
+        return False
+    return True
 
 
 def sign_jwt_es(
@@ -201,218 +291,24 @@ def sign_jwt_es(
     """ES256/ES384/ES512 signing (RFC 7518 §3.4 raw r||s). `key` is
     the private scalar or a SEC1/PKCS#8 EC private PEM (the PEM names
     its own curve, which must match `alg`)."""
-    from connect_spark.functions import ecdsa as E
-
-    curve = E.ALG_CURVES[alg]
     if isinstance(key, str):
-        pem_curve, d = ec_private_from_pem(key)
-        if pem_curve.name != curve.name:
-            raise ValueError(
-                f"{alg} needs a {curve.name} key, PEM is {pem_curve.name}"
-            )
+        d = _es_pem(key, alg, private=True).private_numbers().private_value
     else:
         d = key
-    octets = _EC_OCTETS[alg]
-
-    def sign(msg: bytes) -> bytes:
-        r, s = E.sign(msg, d, curve)
-        return r.to_bytes(octets, "big") + s.to_bytes(octets, "big")
-
-    return _signer(alg, sign)(claims_json)
+    _es_private_key(d, alg)  # a scalar outside [1, n) raises here
+    return _signer(alg, lambda msg: es_sign(msg, d, alg))(claims_json)
 
 
 def parse_jwt_es(
     token: Column, public_key: tuple[int, int] | str, alg: str = "ES256"
 ) -> Column:
     """ES* verify+decode; `public_key` is (x, y) or an SPKI PEM."""
-    from connect_spark.functions import ecdsa as E
-
-    curve = E.ALG_CURVES[alg]
     if isinstance(public_key, str):
-        pem_curve, q = ec_public_from_pem(public_key)
-        if pem_curve.name != curve.name:
-            raise ValueError(
-                f"{alg} needs a {curve.name} key, PEM is {pem_curve.name}"
-            )
+        nums = _es_pem(public_key, alg, private=False).public_numbers()
+        q = (nums.x, nums.y)
     else:
-        q = public_key
-    octets = _EC_OCTETS[alg]
-
-    def verify(msg: bytes, raw: bytes) -> bool:
-        if len(raw) != 2 * octets:
-            return False
-        sig = (
-            int.from_bytes(raw[:octets], "big"),
-            int.from_bytes(raw[octets:], "big"),
-        )
-        return E.verify(msg, sig, q, curve)
-
-    return _parser(alg, verify)(token)
-
-
-# ----------------------------------------- EC / RSA PEM key parsing
-# Reuses the DER reader above (_der_read). Curve OIDs per SEC 2.
-
-_OID_EC_PUBLIC = bytes.fromhex("2a8648ce3d0201")
-_OID_RSA = bytes.fromhex("2a864886f70d010101")
-_CURVE_OIDS = {
-    bytes.fromhex("2a8648ce3d030107"): "P-256",  # prime256v1
-    bytes.fromhex("2b81040022"): "P-384",  # secp384r1
-    bytes.fromhex("2b81040023"): "P-521",  # secp521r1
-}
-
-
-def _pem_der(pem: str) -> bytes:
-    body = "".join(
-        l for l in pem.strip().splitlines() if not l.startswith("-")
+        q = tuple(public_key)
+    _es_public_key(*q, alg)  # a point off the curve raises here
+    return _parser(alg, lambda msg, sig: es_verify(msg, sig, q, alg))(
+        token
     )
-    return base64.b64decode(body)
-
-
-def _der_children(data: bytes) -> list[tuple[int, bytes]]:
-    out = []
-    pos = 0
-    while pos < len(data):
-        tag, content, pos = _der_read(data, pos)
-        out.append((tag, content))
-    return out
-
-
-def _curve_by_oid(oid: bytes):
-    from connect_spark.functions import ecdsa as E
-
-    name = _CURVE_OIDS.get(bytes(oid))
-    if name is None:
-        raise ValueError(f"unsupported EC curve OID {bytes(oid).hex()}")
-    return E.CURVES[name]
-
-
-def ec_private_from_pem(pem: str):
-    """SEC1 'EC PRIVATE KEY' or PKCS#8 'PRIVATE KEY' → (curve, d)."""
-    der = _pem_der(pem)
-    _, seq, _ = _der_read(der, 0)
-    kids = _der_children(seq)
-    if kids[0][0] == 0x02 and kids[0][1] == b"\x00":
-        # PKCS#8: version 0, AlgorithmIdentifier, OCTET STRING(SEC1)
-        alg_kids = _der_children(kids[1][1])
-        if bytes(alg_kids[0][1]) != _OID_EC_PUBLIC:
-            raise ValueError("not an EC key")
-        curve = _curve_by_oid(alg_kids[1][1])
-        _, inner_seq, _ = _der_read(kids[2][1], 0)
-        kids = _der_children(inner_seq)
-        return curve, int.from_bytes(kids[1][1], "big")
-    # SEC1: version 1, OCTET STRING d, [0] curve OID, [1] pubkey
-    if kids[0][1] != b"\x01":
-        raise ValueError("unrecognized EC private key structure")
-    d = int.from_bytes(kids[1][1], "big")
-    curve = None
-    for tag, content in kids[2:]:
-        if tag == 0xA0:  # [0] explicit parameters
-            _, oid, _ = _der_read(content, 0)
-            curve = _curve_by_oid(oid)
-    if curve is None:
-        raise ValueError("SEC1 key missing curve parameters")
-    return curve, d
-
-
-def ec_public_from_pem(pem: str):
-    """SPKI 'PUBLIC KEY' with an uncompressed EC point →
-    (curve, (x, y))."""
-    der = _pem_der(pem)
-    _, seq, _ = _der_read(der, 0)
-    kids = _der_children(seq)
-    alg_kids = _der_children(kids[0][1])
-    if bytes(alg_kids[0][1]) != _OID_EC_PUBLIC:
-        raise ValueError("not an EC public key")
-    curve = _curve_by_oid(alg_kids[1][1])
-    point = kids[1][1][1:]  # skip unused-bits octet of the BIT STRING
-    if point[0] != 0x04:
-        raise ValueError("only uncompressed EC points supported")
-    coord = (len(point) - 1) // 2
-    x = int.from_bytes(point[1 : 1 + coord], "big")
-    y = int.from_bytes(point[1 + coord :], "big")
-    from connect_spark.functions import ecdsa as E
-
-    if not E.on_curve((x, y), curve):
-        raise ValueError("public point not on curve")
-    return curve, (x, y)
-
-
-def rsa_private_from_pem(pem: str) -> tuple[int, int, int]:
-    """PKCS#1 'RSA PRIVATE KEY' or PKCS#8 'PRIVATE KEY' → (n, e, d)."""
-    der = _pem_der(pem)
-    _, seq, _ = _der_read(der, 0)
-    kids = _der_children(seq)
-    if (
-        len(kids) >= 3
-        and kids[0][0] == 0x02
-        and kids[0][1] == b"\x00"
-        and kids[1][0] == 0x30
-    ):
-        alg_kids = _der_children(kids[1][1])
-        if bytes(alg_kids[0][1]) != _OID_RSA:
-            raise ValueError("not an RSA key")
-        _, seq, _ = _der_read(kids[2][1], 0)
-        kids = _der_children(seq)
-    ints = [int.from_bytes(c, "big") for t, c in kids if t == 0x02]
-    # RSAPrivateKey: version, n, e, d, p, q, ...
-    return ints[1], ints[2], ints[3]
-
-
-# ------------------------------------------------- PEM writers (DER)
-# Used in tests and by users exporting generated keys.
-
-
-def _der_len(n: int) -> bytes:
-    if n < 0x80:
-        return bytes([n])
-    body = n.to_bytes((n.bit_length() + 7) // 8, "big")
-    return bytes([0x80 | len(body)]) + body
-
-
-def _der_tlv(tag: int, content: bytes) -> bytes:
-    return bytes([tag]) + _der_len(len(content)) + content
-
-
-def _der_int(v: int) -> bytes:
-    body = v.to_bytes(max(1, (v.bit_length() + 7) // 8), "big")
-    if body[0] & 0x80:
-        body = b"\x00" + body
-    return _der_tlv(0x02, body)
-
-
-def _pem_wrap(der: bytes, label: str) -> str:
-    b64 = base64.b64encode(der).decode()
-    lines = [b64[i : i + 64] for i in range(0, len(b64), 64)]
-    return (
-        f"-----BEGIN {label}-----\n"
-        + "\n".join(lines)
-        + f"\n-----END {label}-----\n"
-    )
-
-
-def ec_private_to_pem(curve, d: int) -> str:
-    """SEC1 'EC PRIVATE KEY' PEM for a private scalar."""
-    oid = next(k for k, v in _CURVE_OIDS.items() if v == curve.name)
-    inner = (
-        _der_int(1)
-        + _der_tlv(0x04, d.to_bytes(curve.qlen_bytes, "big"))
-        + _der_tlv(0xA0, _der_tlv(0x06, oid))
-    )
-    return _pem_wrap(_der_tlv(0x30, inner), "EC PRIVATE KEY")
-
-
-def ec_public_to_pem(curve, q: tuple[int, int]) -> str:
-    """SPKI 'PUBLIC KEY' PEM for an EC point."""
-    oid = next(k for k, v in _CURVE_OIDS.items() if v == curve.name)
-    coord = curve.qlen_bytes
-    point = (
-        b"\x04"
-        + q[0].to_bytes(coord, "big")
-        + q[1].to_bytes(coord, "big")
-    )
-    alg = _der_tlv(
-        0x30, _der_tlv(0x06, _OID_EC_PUBLIC) + _der_tlv(0x06, oid)
-    )
-    spki = _der_tlv(0x30, alg + _der_tlv(0x03, b"\x00" + point))
-    return _pem_wrap(spki, "PUBLIC KEY")

@@ -3,7 +3,7 @@
 The reference's otlp_grpc / otlp_http inputs accept OTLP protobuf
 request bodies.  This module vendors the PUBLIC OTLP schema
 (opentelemetry-proto: collector/trace/v1/trace_service.proto,
-trace/v1/trace.proto, metrics/v1/metrics.proto, common/v1/common.proto,
+trace/v1/trace.proto, common/v1/common.proto,
 resource/v1/resource.proto) as descriptor dicts for the repo's
 pure-Python protobuf wire codec (functions/protobuf_codec.py), so
 binary OTLP bodies decode without grpc or protoc — closing the
@@ -105,57 +105,6 @@ TRACES_REQUEST_DESC = {"fields": {
         "message": _RESOURCE_SPANS, "repeated": True},
 }}
 
-# metrics/v1 -----------------------------------------------------------
-
-_NUMBER_DP = {"fields": {
-    7: {"name": "attributes", "type": "message", "message": _KEY_VALUE,
-        "repeated": True},
-    2: {"name": "startTimeUnixNano", "type": "fixed64"},
-    3: {"name": "timeUnixNano", "type": "fixed64"},
-    4: {"name": "asDouble", "type": "double"},
-    6: {"name": "asInt", "type": "sfixed64"},
-}}
-
-_GAUGE = {"fields": {
-    1: {"name": "dataPoints", "type": "message", "message": _NUMBER_DP,
-        "repeated": True},
-}}
-
-_SUM = {"fields": {
-    1: {"name": "dataPoints", "type": "message", "message": _NUMBER_DP,
-        "repeated": True},
-    2: {"name": "aggregationTemporality", "type": "enum"},
-    3: {"name": "isMonotonic", "type": "bool"},
-}}
-
-METRIC_DESC = {"fields": {
-    1: {"name": "name", "type": "string"},
-    2: {"name": "description", "type": "string"},
-    3: {"name": "unit", "type": "string"},
-    5: {"name": "gauge", "type": "message", "message": _GAUGE},
-    7: {"name": "sum", "type": "message", "message": _SUM},
-}}
-
-_SCOPE_METRICS = {"fields": {
-    1: {"name": "scope", "type": "message", "message": _SCOPE},
-    2: {"name": "metrics", "type": "message", "message": METRIC_DESC,
-        "repeated": True},
-    3: {"name": "schemaUrl", "type": "string"},
-}}
-
-_RESOURCE_METRICS = {"fields": {
-    1: {"name": "resource", "type": "message", "message": _RESOURCE},
-    2: {"name": "scopeMetrics", "type": "message",
-        "message": _SCOPE_METRICS, "repeated": True},
-    3: {"name": "schemaUrl", "type": "string"},
-}}
-
-METRICS_REQUEST_DESC = {"fields": {
-    1: {"name": "resourceMetrics", "type": "message",
-        "message": _RESOURCE_METRICS, "repeated": True},
-}}
-
-
 def _hexify_ids(node: Any) -> Any:
     """bytes → hex for the id fields, base64-ish passthrough elsewhere
     (the OTLP/JSON special-case: trace/span ids are hex strings)."""
@@ -183,13 +132,6 @@ def decode_traces_request(data: bytes) -> dict:
     from connect_spark.functions.protobuf_codec import decode
 
     return _hexify_ids(decode(data, TRACES_REQUEST_DESC))
-
-
-def decode_metrics_request(data: bytes) -> dict:
-    """ExportMetricsServiceRequest bytes → OTLP/JSON-shaped dict."""
-    from connect_spark.functions.protobuf_codec import decode
-
-    return _hexify_ids(decode(data, METRICS_REQUEST_DESC))
 
 
 def encode_traces_request(doc: dict) -> bytes:

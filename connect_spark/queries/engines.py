@@ -283,9 +283,10 @@ def jwt_sign_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ES384 sign→parse roundtrips per event. Self-verifying oracle:
     a correct roundtrip yields the canonical claims JSON (which SQL
     reconstructs from the base columns), a wrong-key parse yields
-    NULL. RS/ES are big-int math per row, so the row set is thinned
+    NULL. RS is big-int math per row, so the row set is thinned
     deterministically (event_id % 500 == 0)."""
-    from connect_spark.functions import ecdsa as E
+    from cryptography.hazmat.primitives.asymmetric import ec
+
     from connect_spark.functions.jwt_hs import (
         parse_jwt_es,
         parse_jwt_hs,
@@ -333,9 +334,10 @@ def jwt_sign_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         _RSA_KEY = (p * q, e, pow(e, -1, (p - 1) * (q - 1)))
     n, e, d_rsa = _RSA_KEY
     d_ec = 0x1337C0DE
-    q_ec = E.public_key(d_ec, E.P384)
+    pub = ec.derive_private_key(d_ec, ec.SECP384R1()).public_key()
+    q_ec = (pub.public_numbers().x, pub.public_numbers().y)
 
-    # RS/ES signatures are pure-Python big-int math per row: after
+    # RS signatures are pure-Python big-int math per row: after
     # the %500 thinning only ~200 rows remain at sf0.1, clumped on
     # the scan's 3 splits — spread them so each core signs a handful
     # (the repartition moves a few hundred narrow rows)

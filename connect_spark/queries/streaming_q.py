@@ -402,98 +402,6 @@ WHERE c.event_type = 'click' AND a.event_type = 'view'
 """
 
 
-def streaming_refresh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STATIC join admission — the streaming twin of
-    pipeline_incremental_refresh's front half, and the registry's
-    stream-static shape: new documents arrive as a 4-file stream
-    (maxFilesPerTrigger=1, so admission genuinely runs per
-    micro-batch), each micro-batch is exact-dedup probed against the
-    STATIC corpus fingerprint table with a stream-static LEFT ANTI
-    join (stateless by design — Spark re-binds the static side per
-    trigger, which at 100 TB is the broadcast/bucketed corpus index),
-    quality-gated with the integer rules, and emitted with its target
-    shard.  Append-mode memory sink, drained and hash-checked against
-    the batch oracle: a bug in per-trigger static re-binding, anti
-    semantics, or the admission filters breaks the hash."""
-    import shutil
-    import tempfile
-
-    ensure_session(spark)
-    docs = spark.read.parquet(table_path(sf_dir, "documents")).select(
-        "doc_id", "text")
-    fp = F.md5(F.lower(F.trim("text")))
-    corpus_fp = (docs.filter(F.col("doc_id") % 10 != 0)
-                 .select(fp.alias("fp")).distinct())
-    staged = tempfile.mkdtemp(prefix="refresh_stream_")
-    try:
-        (docs.filter(F.col("doc_id") % 10 == 0)
-         .repartition(4).write.parquet(staged + "/batch"))
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged + "/batch")
-        )
-        toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-        s = stream.select(
-            "doc_id", fp.alias("fp"),
-            F.size(toks).cast("long").alias("n_tok"),
-            F.aggregate(F.transform(toks, lambda x: F.length(x)),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x).alias("char_sum"))
-        s = s.filter(
-            (F.col("n_tok") >= 5) & (F.col("n_tok") <= 5000)
-            & (F.col("char_sum") <= 12 * F.col("n_tok"))
-            & (F.col("char_sum") >= 2 * F.col("n_tok")))
-        admitted = s.join(corpus_fp, "fp", "left_anti").select(
-            "doc_id", "n_tok",
-            F.substring(
-                F.md5(F.concat(F.lit("shuffle:"),
-                               F.col("doc_id").cast("string"))),
-                1, 1).alias("shard"))
-        name = "strq_" + uuid.uuid4().hex[:12]
-        q = (
-            admitted.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # drain fully before the staging dir disappears
-        return spark.createDataFrame(
-            spark.table(name).collect(), admitted.schema)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-
-
-STREAM_REFRESH_SQL = """
-WITH fps AS (
-  SELECT doc_id, md5(lower(trim(text))) AS fp, text FROM documents
-),
-gated AS (
-  SELECT doc_id, fp, n_tok FROM (
-    SELECT doc_id, fp,
-           len(toks)::BIGINT AS n_tok,
-           COALESCE(list_sum(list_transform(toks, x -> length(x))), 0)
-             AS char_sum
-    FROM (SELECT doc_id, fp,
-                 list_filter(string_split(text, ' '), x -> x != '')
-                   AS toks
-          FROM fps WHERE doc_id % 10 = 0)
-  ) WHERE n_tok BETWEEN 5 AND 5000
-      AND char_sum <= 12 * n_tok AND char_sum >= 2 * n_tok
-)
-SELECT g.doc_id, g.n_tok,
-       substr(md5('shuffle:' || CAST(g.doc_id AS VARCHAR)), 1, 1)
-         AS shard
-FROM gated g
-ANTI JOIN (SELECT DISTINCT fp FROM fps WHERE doc_id % 10 <> 0) c
-  ON c.fp = g.fp
-"""
-
-
 def streaming_cdc_to_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's flagship composition end-to-end IN THE GATE:
     CDC snapshot+WAL → Structured Streaming → Iceberg v2 MERGE —

@@ -142,16 +142,6 @@ def _hyperplanes(n: int, dim: int = _DIM) -> list[list[float]]:
 _PLANES = _hyperplanes(LSH_ROWS * LSH_BANDS)
 
 
-def _band_key(v: Column, band: int) -> Column:
-    """Integer band key: LSH_ROWS sign-bits packed little-endian."""
-    key = F.lit(0)
-    for i in range(LSH_ROWS):
-        w = _PLANES[band * LSH_ROWS + i]
-        proj = _dot(v, F.array(*[F.lit(c) for c in w]))
-        key = key + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return key
-
-
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup via two-stage LSH: (1) candidates = pairs
     sharing at least one of 16 4-bit hyperplane-sign band keys — an

@@ -25,8 +25,8 @@ A bdec blob is:
 
 Spark form: blob construction is per-partition executor work —
 `bdec_chunks` builds one blob per partition inside mapInPandas
-(pyarrow writes the parquet bytes, pure-Python AES from
-functions/aes.py encrypts), and only chunk METADATA rows come back;
+(pyarrow writes the parquet bytes, AES-CTR from functions/aes.py,
+i.e. the `cryptography` package, encrypts), and only chunk METADATA rows come back;
 the driver then assembles the control-plane registration payload.
 That is exactly the 1000-executor shape: executors build + upload,
 the driver registers."""
@@ -101,10 +101,9 @@ def pad_buffer(buf: bytes, alignment: int = _AES_BLOCK) -> bytes:
 
 
 def _ctr(data: bytes, key: bytes, iv: int) -> bytes:
-    from connect_spark.functions.aes import _ctr_stream
+    from connect_spark.functions.aes import encrypt_aes
 
-    iv_bytes = bytes(8) + iv.to_bytes(8, "big")
-    return _ctr_stream(data, key, iv_bytes)
+    return encrypt_aes(data, "ctr", key, bytes(8) + iv.to_bytes(8, "big"))
 
 
 def encrypt_bdec(buf: bytes, encryption_key_b64: str,

@@ -94,20 +94,6 @@ def nats_envelope(df: DataFrame) -> DataFrame:
     )
 
 
-def amqp_envelope(df: DataFrame) -> DataFrame:
-    """AMQP delivery → envelope: routing key + delivery tag (the
-    reference exposes amqp_0_9_routing_key etc.)."""
-    return df.select(
-        F.col("after").cast("binary").alias("content"),
-        F.map_from_arrays(
-            F.array(
-                F.lit("amqp_routing_key"), F.lit("amqp_delivery_tag")
-            ),
-            F.array(F.col("table"), F.col("lsn").cast("string")),
-        ).alias("_meta"),
-    )
-
-
 # ----------------------------------------------------- subject matching
 
 

@@ -1,11 +1,11 @@
 """Full JWT matrix (HS/RS/ES × 256/384/512) + EC/RSA PEM parsing
 (methods.adoc:3982-4491; internal/impl/crypto/jwt_{parse,sign}.go).
 
-ECDSA curves are pinned to RFC 6979 deterministic-signature vectors
-(A.2.5 P-256, A.2.6 P-384) plus structural group checks for P-521,
-and the whole stack is cross-validated against openssl where present:
-openssl-generated keys parse, and our signatures verify under
-`openssl dgst -verify`.
+ECDSA is pinned to RFC 6979 deterministic-signature vectors (A.2.5
+P-256, A.2.6 P-384) through the ES sign path, and the whole stack is
+cross-validated against openssl where present: openssl-generated keys
+parse and sign, and our signatures verify under `openssl dgst -verify`.
+Test PEMs are written with the cryptography package's serialization.
 """
 
 from __future__ import annotations
@@ -16,16 +16,20 @@ import shutil
 import subprocess
 
 import pytest
+from cryptography.hazmat.primitives import serialization as S
+from cryptography.hazmat.primitives.asymmetric import rsa
+from cryptography.hazmat.primitives.asymmetric.utils import (
+    encode_dss_signature,
+)
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from connect_spark.functions import ecdsa as E
 from connect_spark.functions.jwt_hs import (
     _b64url_decode,
-    ec_private_from_pem,
-    ec_private_to_pem,
-    ec_public_from_pem,
-    ec_public_to_pem,
+    _es_pem,
+    _es_private_key,
+    es_sign,
+    es_verify,
     parse_jwt_es,
     parse_jwt_hs,
     parse_jwt_rs,
@@ -39,9 +43,27 @@ from connect_spark.functions.jwt_hs import (
 HAVE_OPENSSL = shutil.which("openssl") is not None
 
 
+def _ec_pems(d: int, alg: str) -> tuple[str, str]:
+    """(SEC1 private PEM, SPKI public PEM) for scalar `d`."""
+    key = _es_private_key(d, alg)
+    priv = key.private_bytes(
+        S.Encoding.PEM, S.PrivateFormat.TraditionalOpenSSL,
+        S.NoEncryption(),
+    )
+    pub = key.public_key().public_bytes(
+        S.Encoding.PEM, S.PublicFormat.SubjectPublicKeyInfo
+    )
+    return priv.decode(), pub.decode()
+
+
+def _rs(sig: bytes) -> tuple[int, int]:
+    half = len(sig) // 2
+    return int.from_bytes(sig[:half], "big"), int.from_bytes(sig[half:], "big")
+
+
 def test_rfc6979_p256_vector():
     x = 0xC9AFA9D845BA75166B5C215767B1D6934E50C3DB36E89B127B8A622B120F6721
-    r, s = E.sign(b"sample", x, E.P256)
+    r, s = _rs(es_sign(b"sample", x, "ES256"))
     assert r == int(
         "EFD48B2AACB6A8FD1140DD9CD45E81D69D2C877B56AAF991C34D0EA84EAF3716",
         16,
@@ -58,7 +80,7 @@ def test_rfc6979_p384_vector():
         "96D5724E4C70A825F872C9EA60D2EDF5",
         16,
     )
-    r, s = E.sign(b"sample", x, E.P384)
+    r, s = _rs(es_sign(b"sample", x, "ES384"))
     assert r == int(
         "94EDBB92A5ECB8AAD4736E56C691916B3F88140666CE9FA73D64C4EA95AD133C"
         "81A648152E44ACF96E36DD1E80FABE46",
@@ -69,18 +91,6 @@ def test_rfc6979_p384_vector():
         "A329C145786E679E7B82C71A38628AC8",
         16,
     )
-
-
-def test_p521_structure_and_roundtrip():
-    c = E.P521
-    assert E.on_curve((c.gx, c.gy), c)
-    assert E._mul(c.n, (c.gx, c.gy), c) is None
-    d = 0xDEADBEEF1234567890
-    q = E.public_key(d, c)
-    assert E.on_curve(q, c)
-    sig = E.sign(b"msg", d, c)
-    assert E.verify(b"msg", sig, q, c)
-    assert not E.verify(b"other", sig, q, c)
 
 
 @pytest.mark.parametrize("alg", ["HS256", "HS384", "HS512"])
@@ -140,11 +150,7 @@ def test_rs_matrix_sign_parse(spark, rsa_key, alg):
 
 @pytest.mark.parametrize("alg", ["ES256", "ES384", "ES512"])
 def test_es_matrix_sign_parse_with_pem_keys(spark, alg):
-    curve = E.ALG_CURVES[alg]
-    d = 0x1337C0DE + 17
-    q = E.public_key(d, curve)
-    priv_pem = ec_private_to_pem(curve, d)
-    pub_pem = ec_public_to_pem(curve, q)
+    priv_pem, pub_pem = _ec_pems(0x1337C0DE + 17, alg)
     df = spark.createDataFrame([Row(claims='{"scope": "x"}')])
     tok = df.select(sign_jwt_es(F.col("claims"), priv_pem, alg).alias("t"))
     row = tok.select(
@@ -168,7 +174,7 @@ def test_es_matrix_sign_parse_with_pem_keys(spark, alg):
 
 
 def test_es_pem_curve_alg_mismatch_raises(spark):
-    pem = ec_private_to_pem(E.P256, 7)
+    pem = _ec_pems(7, "ES256")[0]
     df = spark.createDataFrame([Row(claims="{}")])
     with pytest.raises(ValueError, match="P-384"):
         df.select(sign_jwt_es(F.col("claims"), pem, "ES384"))
@@ -191,25 +197,25 @@ def test_openssl_generated_ec_keys_parse(tmp_path, ossl_curve, name):
         ["openssl", "ec", "-in", str(key), "-pubout", "-out", str(pub)],
         check=True, capture_output=True,
     )
-    curve, d = ec_private_from_pem(key.read_text())
-    assert curve.name == name
-    pcurve, q = ec_public_from_pem(pub.read_text())
-    assert pcurve.name == name
-    # the private scalar reproduces openssl's public point
-    assert E.public_key(d, curve) == q
+    alg = {"P-256": "ES256", "P-384": "ES384", "P-521": "ES512"}[name]
+    priv = _es_pem(key.read_text(), alg, private=True).private_numbers()
+    q = _es_pem(pub.read_text(), alg, private=False).public_numbers()
+    # the private scalar reproduces openssl's public point, and signs
+    assert priv.public_numbers == q
+    sig = es_sign(b"payload", priv.private_value, alg)
+    assert es_verify(b"payload", sig, (q.x, q.y), alg)
 
 
 def _rsa_private_pem(n, e, d, p, q) -> str:
-    """Hand-built PKCS#1 'RSA PRIVATE KEY' PEM with CRT params."""
-    from connect_spark.functions.jwt_hs import _der_int, _der_tlv, _pem_wrap
-
-    dp = d % (p - 1)
-    dq = d % (q - 1)
-    qinv = pow(q, -1, p)
-    body = b"".join(
-        _der_int(v) for v in (0, n, e, d, p, q, dp, dq, qinv)
-    )
-    return _pem_wrap(_der_tlv(0x30, body), "RSA PRIVATE KEY")
+    """PKCS#1 'RSA PRIVATE KEY' PEM with CRT params."""
+    key = rsa.RSAPrivateNumbers(
+        p, q, d, rsa.rsa_crt_dmp1(d, p), rsa.rsa_crt_dmq1(d, q),
+        rsa.rsa_crt_iqmp(p, q), rsa.RSAPublicNumbers(e, n),
+    ).private_key()
+    return key.private_bytes(
+        S.Encoding.PEM, S.PrivateFormat.TraditionalOpenSSL,
+        S.NoEncryption(),
+    ).decode()
 
 
 def test_rsa_private_pem_roundtrip(rsa_key_full):
@@ -250,18 +256,14 @@ def test_openssl_verifies_our_rsa_signature(
 @pytest.mark.parametrize("alg,md", [("ES256", "sha256"), ("ES384", "sha384"),
                                     ("ES512", "sha512")])
 def test_openssl_verifies_our_ecdsa_signature(tmp_path, alg, md):
-    curve = E.ALG_CURVES[alg]
     d = 0xA5A5A5A5
-    q = E.public_key(d, curve)
     pub = tmp_path / "pub.pem"
-    pub.write_text(ec_public_to_pem(curve, q))
+    pub.write_text(_ec_pems(d, alg)[1])
     msg = tmp_path / "msg"
     msg.write_bytes(b"cross-validated payload")
-    r, s = E.sign(b"cross-validated payload", d, curve)
+    r, s = _rs(es_sign(b"cross-validated payload", d, alg))
     # wrap raw (r, s) into the DER ECDSA-Sig-Value openssl expects
-    from connect_spark.functions.jwt_hs import _der_int, _der_tlv
-
-    der_sig = _der_tlv(0x30, _der_int(r) + _der_int(s))
+    der_sig = encode_dss_signature(r, s)
     sigf = tmp_path / "sig.der"
     sigf.write_bytes(der_sig)
     res = subprocess.run(

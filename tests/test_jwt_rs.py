@@ -1,7 +1,7 @@
 """RS256/ES256 JWT sign/verify through the family functions
-(`sign/parse_jwt_rs`, `sign/parse_jwt_es`) — stdlib RSA (RFC 8017
-PKCS#1 v1.5), key generated in-test with Miller-Rabin primes
-(deterministic seed)."""
+(`sign/parse_jwt_rs`, `sign/parse_jwt_es`) — RSA (RFC 8017 PKCS#1
+v1.5) with a key generated in-test from Miller-Rabin primes
+(deterministic seed), and ECDSA pinned on its RFC 6979 vector."""
 
 from __future__ import annotations
 
@@ -14,10 +14,15 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from connect_spark.functions.jwt_hs import (
+    _es_private_key,
+    es_sign,
+    es_verify,
+    parse_jwt_es,
     parse_jwt_rs,
     rsa_public_from_pem,
     rsa_sign_pkcs1,
     rsa_verify_pkcs1,
+    sign_jwt_es,
     sign_jwt_rs,
 )
 
@@ -126,37 +131,37 @@ def test_rsa_public_pem_parsing(rsa_key):
 # ---------------------------------------------------------------- ES256
 
 
-def test_ecdsa_p256_rfc6979_vector():
-    """RFC 6979 A.2.5, P-256 + SHA-256, message 'sample'."""
-    from connect_spark.functions import ecdsa as ec
+def es_point(d: int, alg: str = "ES256") -> tuple[int, int]:
+    """The public point of private scalar `d` on `alg`'s curve."""
+    nums = _es_private_key(d, alg).public_key().public_numbers()
+    return nums.x, nums.y
 
+
+def test_ecdsa_p256_rfc6979_vector():
+    """RFC 6979 A.2.5, P-256 + SHA-256, message 'sample', through the
+    ES256 sign path; the RFC's public key verifies it."""
     d = int(
         "C9AFA9D845BA75166B5C215767B1D6934E50C3DB36E89B127B8A622B120F6721",
         16,
     )
-    q = ec.public_key(d)
-    assert q == (
+    q = (
         int("60FED4BA255A9D31C961EB74C6356D68C049B8923B61FA6CE669622E60F29FB6", 16),
         int("7903FE1008B8BC99A41AE9E95628BC64F2F1B20C2D7E9F5177A3C294D4462299", 16),
     )
-    r, s = ec.sign(b"sample", d)
-    assert r == int(
-        "EFD48B2AACB6A8FD1140DD9CD45E81D69D2C877B56AAF991C34D0EA84EAF3716", 16
+    assert es_point(d) == q
+    sig = es_sign(b"sample", d, "ES256")
+    assert sig.hex().upper() == (
+        "EFD48B2AACB6A8FD1140DD9CD45E81D69D2C877B56AAF991C34D0EA84EAF3716"
+        "F7CB1C942D657C41D436C7A1B6E29F65F3E900DBB9AFF4064DC4AB2F843ACDA8"
     )
-    assert s == int(
-        "F7CB1C942D657C41D436C7A1B6E29F65F3E900DBB9AFF4064DC4AB2F843ACDA8", 16
-    )
-    assert ec.verify(b"sample", (r, s), q)
-    assert not ec.verify(b"samplE", (r, s), q)
+    assert es_verify(b"sample", sig, q, "ES256")
+    assert not es_verify(b"samplE", sig, q, "ES256")
 
 
 def test_jwt_es256_sign_and_parse(spark):
-    from connect_spark.functions import ecdsa as ec
-    from connect_spark.functions.jwt_hs import parse_jwt_es, sign_jwt_es
-
     d = 0xC9AFA9D845BA75166B5C215767B1D6934E50C3DB36E89B127B8A622B120F6721
-    q = ec.public_key(d)
-    other_q = ec.public_key(d + 1)
+    q = es_point(d)
+    other_q = es_point(d + 1)
 
     df = spark.createDataFrame([Row(claims='{"sub": "es", "ok": true}')])
     tok = df.select(sign_jwt_es(F.col("claims"), d, "ES256").alias("tok"))

@@ -162,6 +162,10 @@ def test_headline_plan_shape(plans, name):
     assert "CartesianProduct" not in p, f"{name}: cartesian product"
     assert "BatchEvalPython" not in p, (
         f"{name}: row-at-a-time Python UDF in a headline plan")
+    # a cached relation left behind by an earlier build would make the
+    # plan depend on session history rather than on this query
+    for cached in ("InMemoryRelation", "InMemoryTableScan"):
+        assert cached not in p, f"{name}: {cached} in a headline plan"
     for marker in exp.get("need", ()):
         assert marker in p, f"{name}: expected {marker!r} in plan"
     n_bcast = p.count("BroadcastExchange")
